@@ -534,6 +534,11 @@ def _make_pattern_fn(spec: dict):
                         anchor_t = firsts_t[0] if stage > 0 else cur_ft
                         cand &= st_ <= anchor_t + within_ns
                     idx = np.flatnonzero(cand)
+                    if within_ns is not None and stage == 0 and cur_sub == 0 and len(idx):
+                        # a fresh start anchors at this pass's first
+                        # rank-0 candidate: later sub-occurrences must
+                        # fall inside its horizon too
+                        idx = idx[st_[idx] <= st_[idx[0]] + within_ns]
                     take = need - cur_sub
                     if len(idx) < take:
                         if len(idx):

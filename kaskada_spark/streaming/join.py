@@ -14,7 +14,8 @@ streams). So the operator:
 
 1. unions requests (primary re-keyed by the foreign key) and foreign
    rows, shuffled ONCE on the foreign key;
-2. buffers both sides in per-key state;
+2. buffers both sides in one per-key column buffer with a side column
+   (streaming/buffer.py, which also drops stragglers and arms timers);
 3. on every trigger (and on event-time timeouts), SETTLES all buffered
    rows at-or-before the watermark in (time, subsort, side) order —
    foreign rows update the per-key snapshot, requests emit with the
@@ -38,9 +39,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.streaming.buffer import Buffer, BufferLayout, latest, transport
 
 _IS_REQ = "__is_req"
 _ORIG = "__orig_key"
@@ -61,179 +63,70 @@ def asof_lookup_stream(
     ``(_key, _time, _subsort, *values)`` — the requesting entity's key.
     """
     key_c = F.col(key) if isinstance(key, str) else key
-    ftypes = dict(foreign.dtypes)
+    key_dt = primary.schema[KEY].dataType
+    vtypes = {v: foreign.schema[v].dataType for v in values}
 
     primary = primary.withWatermark(TIME, watermark)
     foreign = foreign.withWatermark(TIME, watermark)
-
-    # Integral requesting keys ride as strings (lossless for any
-    # int64 — a bare nullable int column would go through pandas as
-    # float64 because of the union's null dat rows, corrupting keys
-    # beyond 2^53); every other type rides in its NATIVE form (float,
-    # string, bool, timestamp, binary, decimal all survive the
-    # Arrow->pandas trip with nulls intact).
-    key_dt = primary.schema[KEY].dataType
-    integral_key = isinstance(
-        key_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
-    orig_dt = T.StringType() if integral_key else key_dt
     req = primary.select(
-        key_c.cast(ftypes[KEY]).alias(KEY),
+        key_c.cast(foreign.schema[KEY].dataType).alias(KEY),
         TIME,
         SUBSORT,
-        F.col(KEY).cast(orig_dt).alias(_ORIG),
+        F.col(KEY).alias(_ORIG),
         F.lit(True).alias(_IS_REQ),
-        *[F.lit(None).cast(ftypes[v]).alias(f"__f_{v}") for v in values],
+        *[F.lit(None).cast(dt).alias(f"__f_{v}") for v, dt in vtypes.items()],
     )
     dat = foreign.select(
         KEY,
         TIME,
         SUBSORT,
-        F.lit(None).cast(orig_dt).alias(_ORIG),
+        F.lit(None).cast(key_dt).alias(_ORIG),
         F.lit(False).alias(_IS_REQ),
         *[F.col(v).alias(f"__f_{v}") for v in values],
     )
-    u = req.unionByName(dat)
-
     out_schema = T.StructType(
         [
-            T.StructField(KEY, primary.schema[KEY].dataType),
+            T.StructField(KEY, key_dt),
             T.StructField(TIME, T.TimestampType()),
             T.StructField(SUBSORT, T.LongType()),
         ]
-        + [T.StructField(v, foreign.schema[v].dataType) for v in values]
+        + [T.StructField(v, dt) for v, dt in vtypes.items()]
     )
-    # buffers live in state as parallel arrays; snapshot as scalars
-    state_schema = T.StructType(
-        [
-            T.StructField("have", T.BooleanType()),
-            T.StructField("req_t", T.ArrayType(T.LongType())),
-            T.StructField("req_s", T.ArrayType(T.LongType())),
-            T.StructField("req_k", T.ArrayType(orig_dt)),
-            T.StructField("for_t", T.ArrayType(T.LongType())),
-            T.StructField("for_s", T.ArrayType(T.LongType())),
-        ]
-        + [T.StructField(f"s_{v}", foreign.schema[v].dataType) for v in values]
-        + [T.StructField(f"b_{v}", T.ArrayType(foreign.schema[v].dataType)) for v in values]
-        + [T.StructField("settled_wm", T.LongType())]
-    )
-    func = _make_lookup_fn(list(values), integral_key)
-    return u.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    layout, update = _make_lookup_fn(key_dt, vtypes)
+    return layout.apply(req.unionByName(dat), update, out_schema)
 
 
-def _make_lookup_fn(values: list[str], integral_key: bool = False):
-    state_names = (
-        ["have", "req_t", "req_s", "req_k", "for_t", "for_s"]
-        + [f"s_{v}" for v in values]
-        + [f"b_{v}" for v in values]
-        + ["settled_wm"]
+def _make_lookup_fn(key_dt: T.DataType, vtypes: dict[str, T.DataType]):
+    layout = BufferLayout(
+        [TIME, SUBSORT, _IS_REQ],
+        {_ORIG: key_dt, **{f"__f_{v}": dt for v, dt in vtypes.items()}},
+        [T.StructField(f"__snap_{v}", transport(dt)) for v, dt in vtypes.items()],
     )
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+    names = {_ORIG: KEY, **{f"__f_{v}": v for v in vtypes}}
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {"have": bool(raw["have"]), }
-            for n in state_names[1:]:
-                v = raw[n]
-                if n.startswith(("req_", "for_", "b_")):
-                    st[n] = [] if v is None else list(v)
-                else:
-                    st[n] = v
-        else:
-            st = {"have": False, "req_t": [], "req_s": [], "req_k": [], "for_t": [], "for_s": []}
-            st.update({f"s_{v}": None for v in values})
-            st.update({f"b_{v}": [] for v in values})
-            st["settled_wm"] = None
-
-        # bounded-lateness drop: the snapshot and emitted requests have
-        # advanced through settled_wm; a straggler at-or-behind it
-        # (possible at exactly the watermark, which Spark does NOT drop
-        # upstream) would apply/emit out of order — discard it
-        hw = st["settled_wm"] if st["settled_wm"] is not None else -(2**63)
-        # 1. absorb incoming rows into the buffers
+        buf = Buffer(layout, state)
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            tns = pdf[TIME].astype("int64")
-            is_req = pdf[_IS_REQ].astype(bool)
-            for i in pdf.index:
-                if int(tns[i]) <= hw:
-                    continue
-                if is_req[i]:
-                    st["req_t"].append(int(tns[i]))
-                    st["req_s"].append(int(pdf[SUBSORT][i]))
-                    o = _native(pdf[_ORIG][i])
-                    st["req_k"].append(o)
-                else:
-                    st["for_t"].append(int(tns[i]))
-                    st["for_s"].append(int(pdf[SUBSORT][i]))
-                    for v in values:
-                        st[f"b_{v}"].append(_native(pdf[f"__f_{v}"][i]))
+            buf.append(pdf)
+        # settle everything at-or-before the watermark in (time, subsort,
+        # side) order: foreign rows (side 0) sort first at ties
+        rows = buf.take(buf[TIME] <= buf.wm_ns, TIME, SUBSORT, _IS_REQ)
+        req = rows[_IS_REQ] == 1
+        if len(req):
+            # each row sees the latest foreign row at or before it, or
+            # the snapshot carried in state
+            for v in vtypes:
+                col = latest(rows[f"__f_{v}"], ~req, buf.scalars[f"__snap_{v}"])
+                rows[f"__f_{v}"] = col[req]
+                buf.scalars[f"__snap_{v}"] = col[-1]
+            rows[_ORIG] = rows[_ORIG][req]
+            buf.settle(rows[TIME][-1])
+        buf.store(buf[TIME])
+        if req.any():
+            yield buf.frame(
+                {TIME: rows[TIME][req], SUBSORT: rows[SUBSORT][req]}, rows, names
+            )
 
-        # 2. settle everything at-or-before the watermark, in global
-        # (time, subsort, side) order — foreign first at ties
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        settled_f = sorted(
-            [
-                (st["for_t"][i], st["for_s"][i], 0, i)
-                for i in range(len(st["for_t"]))
-                if st["for_t"][i] <= wm_ns
-            ]
-        )
-        settled_r = [
-            (st["req_t"][i], st["req_s"][i], 1, i)
-            for i in range(len(st["req_t"]))
-            if st["req_t"][i] <= wm_ns
-        ]
-        merged = sorted(settled_f + settled_r)
-        out_rows = []
-        for t, s_, side, i in merged:
-            if side == 0:
-                st["have"] = True
-                for v in values:
-                    st[f"s_{v}"] = st[f"b_{v}"][i]
-            else:
-                k = st["req_k"][i]
-                out_rows.append(
-                    {
-                        KEY: int(k) if (integral_key and k is not None) else k,
-                        TIME: pd.Timestamp(t),
-                        SUBSORT: s_,
-                        **{v: st[f"s_{v}"] for v in values},
-                    }
-                )
-
-        if merged:
-            st["settled_wm"] = int(max(hw, merged[-1][0]))
-        # 3. retain only unsettled rows
-        keep_f = [i for i in range(len(st["for_t"])) if st["for_t"][i] > wm_ns]
-        keep_r = [i for i in range(len(st["req_t"])) if st["req_t"][i] > wm_ns]
-        st["for_t"], st["for_s"] = [st["for_t"][i] for i in keep_f], [st["for_s"][i] for i in keep_f]
-        for v in values:
-            st[f"b_{v}"] = [st[f"b_{v}"][i] for i in keep_f]
-        st["req_t"], st["req_s"], st["req_k"] = (
-            [st["req_t"][i] for i in keep_r],
-            [st["req_s"][i] for i in keep_r],
-            [st["req_k"][i] for i in keep_r],
-        )
-
-        state.update(tuple(st[n] for n in state_names))
-        pending = st["req_t"] + st["for_t"]
-        if pending:
-            # wake when the watermark reaches the earliest pending row
-            # (1ms early — timers fire only when wm moves strictly past)
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(min(pending) // 10**6 - 1, wm_ms + 1))
-
-        if out_rows:
-            yield pd.DataFrame(out_rows)
-
-    return update
+    return layout, update

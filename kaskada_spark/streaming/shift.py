@@ -1,4 +1,4 @@
-"""Streaming shift_to / shift_by: state-buffered re-timing.
+"""Streaming shift_to / shift_by / shift_until: state-buffered re-timing.
 
 The reference's ShiftTo operation moves rows forward to a computed
 future time, buffering pending rows until the stream reaches that time
@@ -7,29 +7,50 @@ unbounded buffering). Streaming rendering: rows wait in per-entity
 state until the event-time watermark passes their target time, then
 re-emit with ``_time = target`` — the watermark is exactly the "stream
 has reached this time" signal, and event-time timeouts wake silent
-entities so buffered rows flush without new input.
+entities so buffered rows flush without new input. ShiftUntil holds
+rows the same way until a settled predicate firing at or after them.
 
-Null or backward targets are dropped before the stateful stage (same
-rule as the batch operator, operators/shift.py). Buffer growth is the
-same hazard the reference flags: rows shifted far into the future hold
-state until the watermark catches up — O(in-flight shifted rows) per
-entity, bounded by how far ahead targets run, not by stream length.
+The buffer, its straggler drop, its state and its timer are the shared
+column buffer (streaming/buffer.py); this module keeps the two settle
+rules. Null or backward targets are dropped before the stateful stage
+(same rule as the batch operator, operators/shift.py). Buffer growth is
+the same hazard the reference flags: rows shifted far into the future
+hold state until the watermark catches up — O(in-flight shifted rows)
+per entity, bounded by how far ahead targets run, not by stream length.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
-from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.prepare import KEY, META, SUBSORT, TIME
+from kaskada_spark.streaming.buffer import Buffer, BufferLayout
 
 _TARGET = "__shift_target"
+_PRED = "__shift_pred"
+
+
+def _payload(tdf: DataFrame) -> dict[str, T.DataType]:
+    return {c: tdf.schema[c].dataType for c in tdf.columns if c not in META}
+
+
+def _out_schema(tdf: DataFrame) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField(TIME, T.TimestampType()),
+            T.StructField(SUBSORT, T.LongType()),
+            T.StructField(KEY, tdf.schema[KEY].dataType),
+        ]
+        + [tdf.schema[c] for c in _payload(tdf)]
+    )
 
 
 def shift_to_stream(
@@ -52,28 +73,8 @@ def shift_to_stream(
     buffered = tdf.withColumn(_TARGET, new_time.cast("timestamp")).filter(
         F.col(_TARGET).isNotNull() & (F.col(_TARGET) >= F.col(TIME))
     )
-    payload = [c for c in tdf.columns if c not in (TIME, SUBSORT, KEY)]
-    out_schema = T.StructType(
-        [
-            T.StructField(TIME, T.TimestampType()),
-            T.StructField(SUBSORT, T.LongType()),
-            T.StructField(KEY, tdf.schema[KEY].dataType),
-        ]
-        + [tdf.schema[c] for c in payload]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("tgt", T.ArrayType(T.LongType())),
-            T.StructField("ot", T.ArrayType(T.LongType())),
-            T.StructField("os", T.ArrayType(T.LongType())),
-        ]
-        + [T.StructField(f"p_{c}", T.ArrayType(tdf.schema[c].dataType)) for c in payload]
-        + [T.StructField("settled_tgt", T.LongType())]
-    )
-    func = _make_shift_fn(payload, max_buffered_rows)
-    return buffered.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    layout, update = _make_shift_fn(_payload(tdf), max_buffered_rows)
+    return layout.apply(buffered, update, _out_schema(tdf))
 
 
 def shift_by_stream(
@@ -86,9 +87,6 @@ def shift_by_stream(
         tdf, F.col(TIME) + delta, watermark=watermark,
         max_buffered_rows=max_buffered_rows,
     )
-
-
-_PRED = "__shift_pred"
 
 
 def shift_until_stream(
@@ -108,204 +106,64 @@ def shift_until_stream(
     firing) per entity."""
     tdf = tdf.withWatermark(TIME, watermark)
     buffered = tdf.withColumn(_PRED, F.coalesce(predicate, F.lit(False)))
-    payload = [c for c in tdf.columns if c not in (TIME, SUBSORT, KEY)]
-    out_schema = T.StructType(
-        [
-            T.StructField(TIME, T.TimestampType()),
-            T.StructField(SUBSORT, T.LongType()),
-            T.StructField(KEY, tdf.schema[KEY].dataType),
-        ]
-        + [tdf.schema[c] for c in payload]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("ot", T.ArrayType(T.LongType())),
-            T.StructField("os", T.ArrayType(T.LongType())),
-            T.StructField("pred", T.ArrayType(T.BooleanType())),
-        ]
-        + [T.StructField(f"p_{c}", T.ArrayType(tdf.schema[c].dataType)) for c in payload]
-        + [T.StructField("hw_t", T.LongType()), T.StructField("hw_s", T.LongType())]
-    )
-    func = _make_shift_until_fn(payload)
-    return buffered.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    layout, update = _make_shift_until_fn(_payload(tdf))
+    return layout.apply(buffered, update, _out_schema(tdf))
 
 
-def _make_shift_until_fn(payload: list[str]):
-    arr_names = ["ot", "os", "pred"] + [f"p_{c}" for c in payload]
-    state_names = arr_names + ["hw_t", "hw_s"]
-
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+def _make_shift_until_fn(payload: dict[str, T.DataType]):
+    layout = BufferLayout([TIME, SUBSORT, _PRED], payload)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {n: ([] if raw[n] is None else list(raw[n])) for n in arr_names}
-            st["hw_t"], st["hw_s"] = raw["hw_t"], raw["hw_s"]
-        else:
-            st = {n: [] for n in arr_names}
-            st["hw_t"] = st["hw_s"] = None
-
-        # bounded-lateness drop: rows at-or-behind the last SETTLED
-        # firing (possible at exactly the watermark — Spark doesn't drop
-        # those upstream) would have been emitted with that firing;
-        # discard instead of emitting them out of order
-        hw = (
-            (st["hw_t"], st["hw_s"])
-            if st["hw_t"] is not None
-            else (-(2**63), -(2**63))
-        )
+        buf = Buffer(layout, state)
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            t_ns = pdf[TIME].astype("int64")
-            for i in pdf.index:
-                if (int(t_ns[i]), int(pdf[SUBSORT][i])) <= hw:
-                    continue
-                st["ot"].append(int(t_ns[i]))
-                st["os"].append(int(pdf[SUBSORT][i]))
-                st["pred"].append(bool(pdf[_PRED][i]))
-                for c in payload:
-                    st[f"p_{c}"].append(_native(pdf[c][i]))
+            buf.append(pdf)
+        t, s, pred = buf[TIME], buf[SUBSORT], buf[_PRED] == 1
+        fired = pred & (t <= buf.wm_ns)
+        rows = None
+        if fired.any():
+            # every row at or before the last settled firing re-times to
+            # the first firing at or after it (firings sort last among
+            # rows that tie on (time, subsort))
+            last = np.lexsort((s[fired], t[fired]))[-1]
+            ft, fs = t[fired][last], s[fired][last]
+            rows = buf.take((t < ft) | ((t == ft) & (s <= fs)), TIME, SUBSORT, _PRED)
+            fire = np.flatnonzero(rows[_PRED])
+            at = rows[TIME][fire[np.searchsorted(fire, np.arange(len(rows[TIME])))]]
+            buf.settle(ft, fs)
+        # wake when the watermark passes the earliest unsettled firing
+        buf.store(buf[TIME][buf[_PRED] == 1])
+        if rows is not None:
+            yield buf.frame({TIME: at, SUBSORT: rows[SUBSORT], KEY: key[0]}, rows)
 
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        order = sorted(range(len(st["ot"])), key=lambda i: (st["ot"][i], st["os"][i]))
-        # settled firings: predicate rows the watermark has passed
-        firings = [
-            (st["ot"][i], st["os"][i])
-            for i in order
-            if st["pred"][i] and st["ot"][i] <= wm_ns
-        ]
-        emitted_idx: list[int] = []
-        rows: list[dict] = []
-        if firings:
-            fi = 0
-            for i in order:
-                okey = (st["ot"][i], st["os"][i])
-                while fi < len(firings) and firings[fi] < okey:
-                    fi += 1
-                if fi >= len(firings):
-                    break  # no settled firing at-or-after this row: keep
-                rows.append(
-                    {
-                        TIME: pd.Timestamp(firings[fi][0]),
-                        SUBSORT: st["os"][i],
-                        KEY: k,
-                        **{c: st[f"p_{c}"][i] for c in payload},
-                    }
-                )
-                emitted_idx.append(i)
-        if emitted_idx:
-            emitted = set(emitted_idx)
-            keep = [i for i in range(len(st["ot"])) if i not in emitted]
-            for n in arr_names:
-                st[n] = [st[n][i] for i in keep]
-        if firings:
-            st["hw_t"], st["hw_s"] = max(hw, firings[-1])
-
-        state.update(tuple(st[n] for n in state_names))
-        pending_preds = [
-            st["ot"][i] for i in range(len(st["ot"])) if st["pred"][i]
-        ]
-        if pending_preds:
-            # wake when the watermark passes the earliest unsettled
-            # firing (1ms early — strict-inequality timer rule)
-            state.setTimeoutTimestamp(
-                max(min(pending_preds) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return update
+    return layout, update
 
 
-def _make_shift_fn(payload: list[str], max_buffered_rows: int | None = None):
-    arr_names = ["tgt", "ot", "os"] + [f"p_{c}" for c in payload]
-    state_names = arr_names + ["settled_tgt"]
-
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+def _make_shift_fn(payload: dict[str, T.DataType], max_buffered_rows: int | None = None):
+    layout = BufferLayout([_TARGET, TIME, SUBSORT], payload, mark=_TARGET)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {n: ([] if raw[n] is None else list(raw[n])) for n in arr_names}
-            st["settled_tgt"] = raw["settled_tgt"]
-        else:
-            st = {n: [] for n in arr_names}
-            st["settled_tgt"] = None
-
-        # bounded-lateness drop: output through settled_tgt is already
-        # emitted; a straggler whose target lands at-or-behind it (rows
-        # at exactly the watermark are NOT dropped by Spark upstream)
-        # would re-time out of order — discard it instead
-        hw = st["settled_tgt"] if st["settled_tgt"] is not None else -(2**63)
+        buf = Buffer(layout, state)
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            tgt_ns = pdf[_TARGET].astype("int64")
-            t_ns = pdf[TIME].astype("int64")
-            for i in pdf.index:
-                if int(tgt_ns[i]) <= hw:
-                    continue
-                st["tgt"].append(int(tgt_ns[i]))
-                st["ot"].append(int(t_ns[i]))
-                st["os"].append(int(pdf[SUBSORT][i]))
-                for c in payload:
-                    st[f"p_{c}"].append(_native(pdf[c][i]))
-            if max_buffered_rows is not None and len(st["tgt"]) > max_buffered_rows:
+            buf.append(pdf)
+            if max_buffered_rows is not None and len(buf) > max_buffered_rows:
                 raise RuntimeError(
-                    f"shift_to buffer for entity {k!r} exceeded "
+                    f"shift_to buffer for entity {key[0]!r} exceeded "
                     f"max_buffered_rows={max_buffered_rows} "
-                    f"({len(st['tgt'])} rows in flight) — targets are "
+                    f"({len(buf)} rows in flight) — targets are "
                     "running too far ahead of the watermark"
                 )
-
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
         # emit rows whose target the watermark has passed, ordered by
         # (target, original time, original subsort) — coincident shifted
         # rows keep their original relative order (shift_to.rs contract)
-        due = sorted(
-            (st["tgt"][i], st["ot"][i], st["os"][i], i)
-            for i in range(len(st["tgt"]))
-            if st["tgt"][i] <= wm_ns
-        )
-        if due:
-            rows = [
-                {
-                    TIME: pd.Timestamp(t),
-                    SUBSORT: s_,
-                    KEY: k,
-                    **{c: st[f"p_{c}"][i] for c in payload},
-                }
-                for t, _, s_, i in due
-            ]
-            keep = [i for i in range(len(st["tgt"])) if st["tgt"][i] > wm_ns]
-            for n in arr_names:
-                st[n] = [st[n][i] for i in keep]
-            st["settled_tgt"] = int(max(hw, due[-1][0]))
-            yield pd.DataFrame(rows)
+        due = buf.take(buf[_TARGET] <= buf.wm_ns, _TARGET, TIME, SUBSORT)
+        if len(due[_TARGET]):
+            buf.settle(due[_TARGET][-1])
+        buf.store(buf[_TARGET])
+        if len(due[_TARGET]):
+            yield buf.frame({TIME: due[_TARGET], SUBSORT: due[SUBSORT], KEY: key[0]}, due)
 
-        state.update(tuple(st[n] for n in state_names))
-        if st["tgt"]:
-            # arm 1ms EARLY: Spark fires event-time timers only when the
-            # watermark moves strictly beyond the timestamp, so a timer
-            # set exactly at the target would never fire when the final
-            # watermark lands on it
-            state.setTimeoutTimestamp(
-                max(min(st["tgt"]) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
-
-    return update
+    return layout, update

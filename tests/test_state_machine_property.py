@@ -16,7 +16,7 @@ import math
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from kaskada_spark.streaming.state_machines import (
@@ -433,23 +433,36 @@ TR_OPS = ("sum", "count", "count_if", "min", "max", "mean",
 
 
 def _drive_tick_running(specs, tick_aliases, comp_names, pdf, cuts):
+    """Feed ``pdf`` split at ``cuts``, each batch at the watermark of the
+    batches before it. Returns the sorted output and the subsorts of
+    the rows the machine must drop, worked out from the feed alone: a
+    batch closes every boundary strictly below its newest event time
+    and every boundary at-or-below its watermark, and a later row whose
+    window's boundary is already closed is a straggler (the
+    bounded-lateness rule of every machine). Rows at exactly the
+    watermark still reach the machine."""
+    cal = _Cal("hourly")
     fn = _make_tick_running_fn(
-        specs, _Cal("hourly"), {s.alias: "num" for s in specs},
+        specs, cal, {s.alias: "num" for s in specs},
         ["v", "fire"], set(tick_aliases), comp_names,
     )
     state = FakeTickState()
-    outs = []
-    seen_max_ms = None
-    t0 = pd.Timestamp(2024, 1, 1).value // 10**6
+    outs, late = [], []
+    seen_max_ms = horizon_ns = None
     for chunk in _chunks(pdf, cuts):
+        tns = chunk["_time"].astype("int64")
+        if horizon_ns is not None:
+            late += chunk.loc[cal.bucket(tns) <= horizon_ns, "_subsort"].tolist()
         state.wm_ms = 0 if seen_max_ms is None else seen_max_ms
         outs.extend(fn((1,), iter([chunk]), state))
-        mx = int(chunk["_time"].astype("int64").max()) // 10**6
+        mx = int(tns.max()) // 10**6
         seen_max_ms = mx if seen_max_ms is None else max(seen_max_ms, mx)
+        closes = max(seen_max_ms * 10**6 - 1, state.wm_ms * 10**6)
+        horizon_ns = closes if horizon_ns is None else max(horizon_ns, closes)
     state.wm_ms = seen_max_ms
     outs.extend(fn((1,), iter([]), state))
     out = pd.concat(outs, ignore_index=True)
-    return out.sort_values(["_time", "_subsort"]).reset_index(drop=True)
+    return out.sort_values(["_time", "_subsort"]).reset_index(drop=True), late
 
 
 @settings(max_examples=50, deadline=None, suppress_health_check=list(HealthCheck))
@@ -466,6 +479,9 @@ def _drive_tick_running(specs, tick_aliases, comp_names, pdf, cuts):
     st.sampled_from(TR_OPS),
     st.sampled_from(["tick", "cond", "plain"]),
 )
+# three events on an hour boundary, cut apart: the third arrives after
+# the watermark closed that boundary's tick, so it is a straggler
+@example([(0, None, False)] * 3, [1, 2], "sum", "tick")
 def test_tick_running_machine_split_invariance(events, cuts, op, mode):
     from kaskada_spark.streaming.state_machines import _state_schema, _value_kind  # noqa: F401
 
@@ -485,8 +501,9 @@ def test_tick_running_machine_split_invariance(events, cuts, op, mode):
     from kaskada_spark.streaming.state_machines import _STATE_COMPS
 
     comp_names = [f"out__{c}" for c in _STATE_COMPS[op]]
-    single = _drive_tick_running([spec], tick_aliases, comp_names, pdf, [])
-    split = _drive_tick_running([spec], tick_aliases, comp_names, pdf, cuts)
+    split, late = _drive_tick_running([spec], tick_aliases, comp_names, pdf, cuts)
+    kept = pdf[~pdf["_subsort"].isin(late)].reset_index(drop=True)
+    single, _ = _drive_tick_running([spec], tick_aliases, comp_names, kept, [])
     assert len(single) == len(split), (len(single), len(split))
     for i in range(len(single)):
         a, b = single.iloc[i], split.iloc[i]
@@ -605,8 +622,9 @@ def test_tick_machine_chained_split_invariance(events, cuts, inner_op, outer_op,
     comp_names = [f"inner__{c}" for c in _STATE_COMPS[inner_op]] + [
         f"out__{c}" for c in _STATE_COMPS[outer_op]
     ]
-    single = _drive_tick_running(specs, tick_aliases, comp_names, pdf, [])
-    split = _drive_tick_running(specs, tick_aliases, comp_names, pdf, cuts)
+    split, late = _drive_tick_running(specs, tick_aliases, comp_names, pdf, cuts)
+    kept = pdf[~pdf["_subsort"].isin(late)].reset_index(drop=True)
+    single, _ = _drive_tick_running(specs, tick_aliases, comp_names, kept, [])
     assert len(single) == len(split), (len(single), len(split))
     for i in range(len(single)):
         a, b = single.iloc[i], split.iloc[i]
@@ -821,6 +839,15 @@ def test_pattern_machine_min_count_fuzz():
 
     from tests.test_cep import _brute_pattern
 
+    # `a{3,} b?` within 100 s with `a` at 0, 1 and 1000 s in ONE batch:
+    # the third `a` lies past the first one's horizon, so nothing matches
+    spec = [("a", "+", 3), ("b", "?")]
+    events = [(0, 0, "a", 1), (1, 1, "a", 1), (1000, 2, "a", 1)]
+    flags = [(t, s, (lbl == "a", lbl == "b"), v) for t, s, lbl, v in events]
+    assert not _brute_pattern(flags, spec, within=100)["completed"]
+    for cuts in ([], [1], [2], [1, 2]):
+        assert _drive_pattern(spec, 100, events, cuts) is None, cuts
+
     rng = random.Random(43)
     spec = [("a", "1"), ("b", "+", 3), ("c", "1")]
     n_emitted = 0
@@ -927,3 +954,304 @@ def test_pattern_machine_unless_trailing_fuzz():
         if any(a for *_x, a in flags):
             n_closed_by_abort += 1
     assert n_emitted >= 40 and n_closed_by_abort >= 10
+
+
+# ---------------------------------------------------------------------------
+# The four watermark-settling machines (shift_to, shift_until, merge,
+# lookup): Spark-free differential fuzz vs pandas models of the batch
+# operators, fed as one batch, one row per batch and random cuts
+# ---------------------------------------------------------------------------
+import random
+
+from pyspark.sql import types as T
+
+from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.streaming import join as sjoin
+from kaskada_spark.streaming import merge as smerge
+from kaskada_spark.streaming import shift as sshift
+
+_BASE = pd.Timestamp(2024, 1, 1)
+_BASE_MS = _BASE.value // 10**6
+_BIG = 2**53 + 1  # the smallest int64 a float64 cannot hold
+_INT_MAX = 2**63 - 1
+
+
+class WatermarkState(FakeTickState):
+    """GroupState with a settable watermark that records the event-time
+    timer. Spark clears the timer before every call, so ``_feed``
+    resets ``timer`` before each one."""
+
+    def __init__(self):
+        super().__init__()
+        self.timer = None
+
+    def setTimeoutTimestamp(self, ts):
+        assert ts > self.wm_ms, (ts, self.wm_ms)
+        self.timer = ts
+
+
+def _ts(sec):
+    return _BASE + pd.Timedelta(seconds=sec)
+
+
+def _sec(x):
+    return int((pd.Timestamp(x) - _BASE) / pd.Timedelta(seconds=1))
+
+
+def _plain(x):
+    if x is None or x is pd.NaT or (isinstance(x, float) and math.isnan(x)):
+        return None
+    return x.item() if hasattr(x, "item") else x
+
+
+def _carried_long(vals):
+    """A nullable long payload column as the machines receive it: as
+    strings (streaming/buffer.py)."""
+    return pd.Series([None if v is None else str(v) for v in vals], dtype=object)
+
+
+def _feed(fn, rows, cuts, mk_pdf, mark, due):
+    """Feed ``rows`` (arrival order, one entity) the way Spark does with
+    a 0 s watermark delay: a micro-batch sees the watermark of the
+    batches before it, rows strictly behind it are dropped upstream, a
+    batch left empty calls the machine only when its timer has passed,
+    and a final far-future watermark flushes.
+
+    ``mark(row)`` is the (time, subsort) the machine compares to its
+    settled high-water mark; ``due(row)`` is the time at which an
+    accepted row settles (and moves that mark), or None if it never
+    settles on its own. After every call the armed timer must sit 1 ms
+    before the earliest pending due time, and never at or behind the
+    watermark. Returns (output frames in emission order, rows the batch
+    operator sees, coverage counts)."""
+    state = WatermarkState()
+    idx = pd.DataFrame({"i": range(len(rows))})
+    batches = [[rows[i] for i in c["i"]] for c in _chunks(idx, cuts)]
+    outs, accepted = [], []
+    hw = (-(2**63), -(2**63))
+    seen = None
+    cover = {"at_wm": 0, "straggler": 0}
+
+    def call(batch, wm_s):
+        nonlocal hw
+        state.wm_ms, state.timer = _BASE_MS + int(wm_s * 1000), None
+        feed = iter([mk_pdf(batch)] if batch else [])
+        outs.extend(o for o in fn((1,), feed, state) if len(o))
+        dues = [(due(r), mark(r)) for r in accepted if due(r) is not None]
+        hw = max([hw] + [m for d, m in dues if d <= wm_s])
+        pending = [d for d, _m in dues if d > wm_s]
+        want = (max(_BASE_MS + min(pending) * 1000 - 1, state.wm_ms + 1)
+                if pending else None)
+        assert state.timer == want, (state.timer, want)
+
+    for batch in batches + [None]:
+        # Spark's watermark is the epoch until the first batch; the
+        # final one lies past every shift target
+        wm_s = 10**6 if batch is None else (-_BASE_MS // 1000 if seen is None else seen)
+        live = []
+        for r in batch or []:
+            if r["t"] < wm_s:
+                continue  # late: Spark drops it before the machine
+            if mark(r) <= hw:
+                cover["straggler"] += 1  # the machine must drop it
+            else:
+                cover["at_wm"] += r["t"] == wm_s
+                accepted.append(r)
+            live.append(r)
+        if live:
+            call(live, wm_s)
+        elif state.timer is not None and _BASE_MS + int(wm_s * 1000) > state.timer:
+            call([], wm_s)
+        if batch:
+            seen = max([r["t"] for r in batch] + ([] if seen is None else [seen]))
+    return outs, accepted, cover
+
+
+def _out_rows(outs, cols):
+    rows = []
+    for o in outs:
+        vals = [o[TIME].tolist(), o[SUBSORT].tolist()] + [o[c].tolist() for c in cols]
+        rows.extend((_sec(t), int(s), *map(_plain, rest)) for t, s, *rest in zip(*vals))
+    return rows
+
+
+_PAYLOAD = {"v": T.DoubleType(), "tag": T.StringType(), "n": T.LongType()}
+
+
+def _payload(rng):
+    return {
+        "v": rng.choice([None, 1.5, -2.25, 7.0]),
+        "tag": rng.choice([None, "x", "y"]),
+        "n": rng.choice([None, 5, -3, _BIG]),
+    }
+
+
+def _shift_to_case(rng, n):
+    rows = [dict(t=rng.randint(0, 12), s=i, d=rng.choice((0, 0, 1, 2, 5)), **_payload(rng))
+            for i in range(n)]
+    def mk_pdf(batch):
+        return pd.DataFrame({
+            TIME: [_ts(r["t"]) for r in batch], SUBSORT: [r["s"] for r in batch],
+            KEY: [1] * len(batch),
+            "v": pd.Series([r["v"] for r in batch], dtype="float64"),
+            "tag": pd.Series([r["tag"] for r in batch], dtype=object),
+            "n": _carried_long([r["n"] for r in batch]),
+            sshift._TARGET: [_ts(r["t"] + r["d"]) for r in batch],
+        })
+
+    def model(acc):
+        return [(r["t"] + r["d"], r["s"], 1, r["v"], r["tag"], r["n"]) for r in acc]
+
+    return dict(
+        rows=rows, fn=sshift._make_shift_fn(_PAYLOAD)[1], mk_pdf=mk_pdf, model=model,
+        cols=[KEY, *_PAYLOAD],
+        mark=lambda r: (r["t"] + r["d"], _INT_MAX),
+        due=lambda r: r["t"] + r["d"],
+    )
+
+
+def _shift_until_case(rng, n):
+    rows = [dict(t=rng.randint(0, 12), s=i, p=rng.random() < 0.3, **_payload(rng))
+            for i in range(n)]
+    def mk_pdf(batch):
+        return pd.DataFrame({
+            TIME: [_ts(r["t"]) for r in batch], SUBSORT: [r["s"] for r in batch],
+            KEY: [1] * len(batch),
+            "v": pd.Series([r["v"] for r in batch], dtype="float64"),
+            "tag": pd.Series([r["tag"] for r in batch], dtype=object),
+            "n": _carried_long([r["n"] for r in batch]),
+            sshift._PRED: [r["p"] for r in batch],
+        })
+
+    def model(acc):
+        df = pd.DataFrame({"t": [r["t"] for r in acc], "s": [r["s"] for r in acc],
+                           "p": [r["p"] for r in acc], "r": acc})
+        df = df.sort_values(["t", "s"])
+        fire = df["t"].where(df["p"]).bfill()
+        return [(int(f), r["s"], 1, r["v"], r["tag"], r["n"])
+                for f, r in zip(fire, df["r"]) if not math.isnan(f)]
+
+    return dict(
+        rows=rows, fn=sshift._make_shift_until_fn(_PAYLOAD)[1], mk_pdf=mk_pdf, model=model,
+        cols=[KEY, *_PAYLOAD],
+        mark=lambda r: (r["t"], r["s"]),
+        due=lambda r: r["t"] if r["p"] else None,
+    )
+
+
+def _merge_case(rng, n):
+    keys = {(rng.choice("LR"), rng.randint(0, 12), rng.randint(0, 4)) for _ in range(n)}
+    rows = [dict(side=side, t=t, s=s, price=rng.choice([None, 1.5, 9.0]),
+                 qty=rng.choice([None, 2, _BIG]), tag=rng.choice([None, "x"]))
+            for side, t, s in sorted(keys)]
+    for r in rows:
+        if r["side"] == "L":
+            r["qty"] = r["tag"] = None
+        else:
+            r["price"] = None
+
+    def mk_pdf(batch):
+        return pd.DataFrame({
+            KEY: [1] * len(batch), TIME: [_ts(r["t"]) for r in batch],
+            SUBSORT: [r["s"] for r in batch],
+            smerge._SIDE: [r["side"] == "L" for r in batch],
+            "price": pd.Series([r["price"] for r in batch], dtype="float64"),
+            "qty": _carried_long([r["qty"] for r in batch]),
+            "tag": pd.Series([r["tag"] for r in batch], dtype=object),
+        })
+
+    def model(acc):
+        cols = ["t", "s", "price", "qty", "tag"]
+        side = {sd: pd.DataFrame([[r[c] for c in cols] for r in acc if r["side"] == sd],
+                                 columns=cols, dtype=object) for sd in "LR"}
+        m = side["L"][["t", "s", "price"]].merge(
+            side["R"][["t", "s", "qty", "tag"]], on=["t", "s"], how="outer"
+        ).sort_values(["t", "s"], key=lambda c: c.astype("int64"))
+        latch, out = None, []
+        for t, s, price, qty, tag in m.itertuples(index=False):
+            latch = latch if _plain(qty) is None else qty
+            out.append((int(t), int(s), 1, _plain(price), latch, _plain(tag)))
+        return out
+
+    return dict(
+        rows=rows,
+        fn=smerge._make_merge_fn(["price"], ["qty", "tag"], ["qty"], {
+            "price": T.DoubleType(), "qty": T.LongType(), "tag": T.StringType()})[1],
+        mk_pdf=mk_pdf, model=model, cols=[KEY, "price", "qty", "tag"],
+        mark=lambda r: (r["t"], _INT_MAX), due=lambda r: r["t"],
+    )
+
+
+def _lookup_case(rng, n):
+    keys = {(rng.choice("FQ"), rng.randint(0, 12), rng.randint(0, 4)) for _ in range(n)}
+    rows = [dict(side=side, t=t, s=s, price=rng.choice([None, 1.5, 9.0]),
+                 qty=rng.choice([None, 2, _BIG]), orig=rng.choice([7, -1, _BIG]))
+            for side, t, s in sorted(keys)]
+
+    def mk_pdf(batch):
+        req = [r["side"] == "Q" for r in batch]
+        return pd.DataFrame({
+            KEY: [1] * len(batch), TIME: [_ts(r["t"]) for r in batch],
+            SUBSORT: [r["s"] for r in batch],
+            sjoin._ORIG: pd.Series([str(r["orig"]) if q else None for r, q in zip(batch, req)],
+                                   dtype=object),
+            sjoin._IS_REQ: req,
+            "__f_price": pd.Series([None if q else r["price"] for r, q in zip(batch, req)],
+                                   dtype="float64"),
+            "__f_qty": _carried_long([None if q else r["qty"] for r, q in zip(batch, req)]),
+        })
+
+    def model(acc):
+        snap, out = (None, None), []
+        for r in sorted(acc, key=lambda r: (r["t"], r["s"], r["side"] == "Q")):
+            if r["side"] == "F":
+                snap = (r["price"], r["qty"])
+            else:
+                out.append((r["t"], r["s"], r["orig"], *snap))
+        return out
+
+    return dict(
+        rows=rows,
+        fn=sjoin._make_lookup_fn(
+            T.LongType(), {"price": T.DoubleType(), "qty": T.LongType()})[1],
+        mk_pdf=mk_pdf,
+        model=model, cols=[KEY, "price", "qty"],
+        mark=lambda r: (r["t"], _INT_MAX), due=lambda r: r["t"],
+    )
+
+
+_SETTLING = {
+    "shift_to": _shift_to_case,
+    "shift_until": _shift_until_case,
+    "merge": _merge_case,
+    "lookup": _lookup_case,
+}
+
+
+@pytest.mark.parametrize("machine", sorted(_SETTLING))
+def test_settling_machine_matches_batch_model_fuzz(machine):
+    """Each watermark-settling machine == a pandas model of its batch
+    operator on the rows the stream accepts, whether fed as one batch,
+    one row per batch or at random cuts. Arrival order is locally
+    shuffled and times collide, so batches see rows at exactly the
+    watermark (kept) and stragglers at the settled high-water mark
+    (dropped); the machine's own event-time timer drives every flush."""
+    rng = random.Random(71)
+    cover = {"at_wm": 0, "straggler": 0, "emitted": 0}
+    for trial in range(150):
+        case = _SETTLING[machine](rng, rng.randint(1, 18))
+        rows = sorted(case["rows"], key=lambda r: r["t"] + 3 * rng.random())
+        n = len(rows)
+        for cuts in ([], list(range(n)), sorted(rng.randint(0, n) for _ in range(rng.randint(1, 5)))):
+            outs, acc, cov = _feed(case["fn"], rows, cuts, case["mk_pdf"],
+                                   case["mark"], case["due"])
+            got = _out_rows(outs, case["cols"])
+            times = [r[0] for r in got]
+            assert times == sorted(times), (trial, cuts, "emitted out of order")
+            exp = case["model"](acc)
+            assert sorted(got, key=lambda r: r[:2]) == sorted(exp, key=lambda r: r[:2]), (
+                trial, cuts)
+            cover["at_wm"] += cov["at_wm"]
+            cover["straggler"] += cov["straggler"]
+            cover["emitted"] += len(got)
+    assert cover["at_wm"] >= 100 and cover["straggler"] >= 20 and cover["emitted"] >= 1000, cover

@@ -727,12 +727,17 @@ def test_stream_shift_by_equals_batch(spark, tmp_path):
         for m in range(0, 60, 7)
     ]
     pdf = pd.DataFrame(rows, columns=["k", "time", "seq", "v"])
+    # nullable long payload with a null and a value float64 cannot hold
+    pdf["n"] = pd.array(
+        [None if i % 5 == 1 else 2**53 + 1 if i % 5 == 2 else i for i in range(len(pdf))],
+        dtype="Int64",
+    )
     tl = Timeline.from_events(spark.createDataFrame(pdf), "time", "k", "seq")
 
     batch = tl.shift_by(F.expr("interval 5 minutes")).df
     wm_final = t0 + pd.Timedelta(minutes=56)  # max original event time
     exp = {
-        (r["_key"], r["_subsort"]): (r["_time"], r["v"])
+        (r["_key"], r["_subsort"]): (r["_time"], r["v"], r["n"])
         for r in batch.collect()
         if r["_time"] <= wm_final
     }
@@ -754,7 +759,7 @@ def test_stream_shift_by_equals_batch(spark, tmp_path):
     )
     q.awaitTermination()
     got = {
-        (r["_key"], r["_subsort"]): (r["_time"], r["v"])
+        (r["_key"], r["_subsort"]): (r["_time"], r["v"], r["n"])
         for r in sink.read_output(spark).collect()
     }
     assert set(exp) <= set(got.keys() | exp.keys())
@@ -762,7 +767,7 @@ def test_stream_shift_by_equals_batch(spark, tmp_path):
         assert kk in got, f"missing shifted row {kk}"
         assert got[kk] == ev, f"{kk}: want {ev}, got {got[kk]}"
     # nothing emitted beyond the watermark frontier rule
-    for kk, (t, _) in got.items():
+    for kk, (t, *_) in got.items():
         assert t <= wm_final
 
 
@@ -822,12 +827,17 @@ def test_stream_shift_until_equals_batch(spark, tmp_path):
                          float(m), m in (15, 35, 55)))
     # a trailing unfired row per entity stays buffered (dropped in batch)
     pdf = pd.DataFrame(rows, columns=["k", "time", "seq", "v", "fire"])
+    # nullable long payload with a null and a value float64 cannot hold
+    pdf["n"] = pd.array(
+        [None if i % 5 == 1 else 2**53 + 1 if i % 5 == 2 else i for i in range(len(pdf))],
+        dtype="Int64",
+    )
     tl = Timeline.from_events(spark.createDataFrame(pdf), "time", "k", "seq")
 
     batch = tl.shift_until(F.col("fire")).df
     wm_final = t0 + pd.Timedelta(minutes=55)
     exp = {
-        (r["_key"], r["_subsort"]): (r["_time"], r["v"])
+        (r["_key"], r["_subsort"]): (r["_time"], r["v"], r["n"])
         for r in batch.collect()
         if r["_time"] <= wm_final
     }
@@ -850,7 +860,7 @@ def test_stream_shift_until_equals_batch(spark, tmp_path):
     )
     q.awaitTermination()
     got = {
-        (r["_key"], r["_subsort"]): (r["_time"], r["v"])
+        (r["_key"], r["_subsort"]): (r["_time"], r["v"], r["n"])
         for r in sink.read_output(spark).collect()
     }
     # every batch row whose firing the final watermark passed must be

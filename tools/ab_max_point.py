@@ -69,15 +69,19 @@ def main() -> None:
                 results["head"].extend(h["runs"])
     finally:
         shutil.rmtree(input_dir, ignore_errors=True)
-    bo, bh = min(results["old"]), min(results["head"])
-    print(json.dumps({
+    report = {
         "master": MASTER, "n_rows": N_ROWS, "old_repo": old,
         "old_runs": results["old"], "head_runs": results["head"],
-        "old_best_sec": bo, "head_best_sec": bh,
-        "old_seq_per_sec": round(N_ROWS / bo, 1),
-        "head_seq_per_sec": round(N_ROWS / bh, 1),
-        "head_over_old": round(bo / bh, 3),
-    }))
+    }
+    # a side whose every run failed has no best time: print what exists
+    bo, bh = min(results["old"], default=None), min(results["head"], default=None)
+    if bo is not None:
+        report.update(old_best_sec=bo, old_seq_per_sec=round(N_ROWS / bo, 1))
+    if bh is not None:
+        report.update(head_best_sec=bh, head_seq_per_sec=round(N_ROWS / bh, 1))
+    if bo is not None and bh is not None:
+        report["head_over_old"] = round(bo / bh, 3)
+    print(json.dumps(report))
 
 
 if __name__ == "__main__":
