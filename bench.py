@@ -13,7 +13,8 @@ Two parts:
 
 1. Per-query wall time for every ``queries()`` entry at
    ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-   ``local[$SPARK_GRAFT_CPUS]`` — each query is forced with a
+   ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may
+   run on, ``session.DEFAULT_CPUS``) — each query is forced with a
    count-of-collected-plan (``df.write.format("noop")``) so the whole
    plan executes without driver-side materialization cost.
 
@@ -23,7 +24,7 @@ Two parts:
    sink). HEADLINE scaling = N -> 4N separate executor JVMs via
    local-cluster (fixed 2-core executors, 1 -> 4 of them) — the north
    rule's mandated two-cluster-size measurement; a single-JVM thread
-   sweep (2/8/32 cores) rides along as the secondary curve plus the
+   sweep (2/8/max cores) rides along as the secondary curve plus the
    8x4c max-cluster throughput point.
 
 Usage:
@@ -45,8 +46,9 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from kaskada_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 64M rows: large enough that fixed per-run costs (streaming query
 # startup, checkpoint setup, first-batch planning) stay under ~10% of
 # the smallest level's wall time — at 32M those constants dominate the
@@ -322,7 +324,7 @@ def scaling_sweep(spark, n_rows: int) -> dict:
             "max_throughput_seq_per_sec": thr(CPUS),
             "note": "headline pair = separate executor JVMs via local-cluster "
                     "(the north rule's N->4N executors); thread levels kept as "
-                    "the secondary single-JVM sweep — 8->32 threads in ONE JVM "
+                    "the secondary single-JVM sweep — 8->max threads in ONE JVM "
                     "degrades on this VM (kernel/GC artifact, profiled in "
                     "BENCH.md) and run-to-run variance is higher there",
         }

@@ -1,14 +1,15 @@
-"""CEP sequence matching: first-occurrence funnels and quantified
-patterns per entity.
+"""CEP sequence matching per entity: quantified patterns, and the
+first-occurrence funnel as their all-``"1"`` special case.
 
 The north rule names a "structured-streaming / CEP engine"; sessions,
 windows and stateful joins cover most of that surface, and this module
 adds the classic event-sequence primitive: does each entity's timeline
 contain step-1 THEN step-2 THEN ... step-k, optionally all within a
 horizon measured from the step-1 instant (MATCH_RECOGNIZE-style
-`A B+ C` reduced to its dominant analytics form, the funnel).
+``A B+ C?``, see :func:`match_pattern`).
 
-Semantics (first-occurrence / AFTER MATCH SKIP TO FIRST):
+A funnel (:func:`match_funnel`) is a pattern whose every step is a
+plain ``"1"`` (first-occurrence / AFTER MATCH SKIP TO FIRST):
 - t1 = the entity's FIRST row matching step 1;
 - t_i = the FIRST row matching step i strictly after (t_{i-1},
   subsort_{i-1}) and (if ``within``) at-or-before t1 + within. A single
@@ -17,22 +18,25 @@ Semantics (first-occurrence / AFTER MATCH SKIP TO FIRST):
 - First-occurrence is well-defined under ``within``: if the first
   step-i row after t_{i-1} falls outside the horizon, every later one
   does too, so greedy == optimal and no backtracking exists.
+``match_funnel`` only names the steps and calls ``match_pattern``.
 
 Scale posture: the lowering is ONE shuffle. Rows are pre-filtered to
 those matching ANY step (predicate pushdown to the scan), then a single
-`partitionBy(_key).orderBy(_time,_subsort)` window computes k chained
+`partitionBy(_key).orderBy(_time,_subsort)` window computes chained
 running-min structs — each `__r{i}` is the running "first step-i row
 seen so far that follows __r{i-1}"; because rows are scanned in order,
 the running min is CONSTANT once set, so the stacked Window operators
 reuse one exchange+sort, and the final per-entity groupBy is satisfied
 by the same hash partitioning (no second exchange). State per row is
 k small structs — no per-entity buffering, unlike a collect_list
-lowering which would hold a hot entity's whole history in one task.
+lowering which would hold a hot entity's whole history in one task. A
+funnel uses none of the consumption/observation finals, so Catalyst
+prunes them and it plans as k running-min windows (one more with
+``unless``).
 
-The streaming twin (streaming/cep.py::funnel_stream) carries
-(stage, step times) per entity in applyInPandasWithState and emits one
-row per completed funnel; batch ``completed`` rows equal the streamed
-output on ordered replay (tests/test_cep.py).
+The streaming twin is streaming/cep.py::pattern_stream (funnel_stream
+is its all-``"1"`` adapter); batch ``completed`` rows equal the
+streamed output on ordered replay (tests/test_cep.py).
 """
 
 from __future__ import annotations
@@ -90,6 +94,49 @@ class PatternStep:
     min_count: int = 1
 
 
+def _validate_steps(steps: Sequence[PatternStep]) -> tuple[list[int], dict[int, int]]:
+    """Reject a malformed pattern — the one check list of
+    :func:`match_pattern` and streaming ``pattern_stream``. Returns the
+    required (``"1"``/``"+"``) step indices and each step's required
+    rank (for observers, the rank of the nearest PRECEDING required
+    step, its anchor)."""
+    if len(steps) < 2:
+        raise ValueError("a pattern needs at least two steps")
+    names = [s.name for s in steps]
+    if len(set(names)) != len(names):
+        raise ValueError(f"step names must be unique, got {names}")
+    for s in steps:
+        if s.quant not in ("1", "+", "?", "*"):
+            raise ValueError(
+                f"step {s.name!r}: quant must be '1', '+', '?' or '*'"
+            )
+        if s.aggs and s.quant not in ("+", "*"):
+            raise ValueError(f"step {s.name!r}: aggregates need quant '+' or '*'")
+        for out, fn, _col in s.aggs:
+            if fn not in ("sum", "min", "max"):
+                raise ValueError(f"step {s.name!r}: agg fn {fn!r} not in sum/min/max")
+        if s.min_count < 1:
+            raise ValueError(f"step {s.name!r}: min_count must be >= 1")
+        if s.min_count > 1 and s.quant != "+":
+            raise ValueError(f"step {s.name!r}: min_count needs quant '+'")
+    if steps[0].quant in ("?", "*"):
+        raise ValueError("a pattern cannot start with an optional step")
+    req = [i for i, s in enumerate(steps) if s.quant in ("1", "+")]
+    rank_of = {i: sum(j <= i for j in req) - 1 for i in range(len(steps))}
+    return req, rank_of
+
+
+def _funnel_steps(
+    steps: Sequence[Column], step_names: Sequence[str] | None
+) -> list[PatternStep]:
+    """A funnel as a pattern: one plain ``"1"`` step per predicate,
+    named ``step_names`` (default ``step1..stepk``)."""
+    names = list(step_names) if step_names else [f"step{i + 1}" for i in range(len(steps))]
+    if len(names) != len(steps):
+        raise ValueError("step_names must match steps")
+    return [PatternStep(n, pred) for n, pred in zip(names, steps)]
+
+
 def match_funnel(
     tl: Timeline,
     steps: Sequence[Column],
@@ -97,80 +144,18 @@ def match_funnel(
     step_names: Sequence[str] | None = None,
     unless: Column | None = None,
 ) -> DataFrame:
-    """Per-entity first-occurrence funnel over ``steps`` predicates.
+    """Per-entity first-occurrence funnel over ``steps`` predicates: the
+    all-``"1"`` :func:`match_pattern` (see the module docstring).
 
     Returns one row per entity that has at least one row matching any
     step: ``(_key, step_reached, t_<name> per step, completed)``.
     ``within`` is an SQL interval body (e.g. ``"48 hours"``) bounding
-    steps 2..k relative to the step-1 instant.
-
-    ``unless`` is the CEP abort predicate ("A then B then C with no X
-    in between"): a row matching it strictly after the step-1 instant
-    kills the match — steps at-or-after the first abort row don't
-    count. Exactness without backtracking: first-occurrence matching is
-    greedy-minimal (each t_i is the earliest achievable given the
-    anchored t1), so a match avoiding the abort row exists iff the
-    greedy one does; the lowering just adds one more chained
-    running-min (the first abort row after t1) and voids hits at-or-
-    after it.
+    steps 2..k relative to the step-1 instant. ``unless`` is the CEP
+    abort predicate ("A then B then C with no X in between"): a row
+    matching it strictly after the step-1 instant kills the match —
+    steps at-or-after the first abort row don't count.
     """
-    k = len(steps)
-    if k < 2:
-        raise ValueError("a funnel needs at least two steps")
-    names = list(step_names) if step_names else [f"step{i + 1}" for i in range(k)]
-    if len(names) != k:
-        raise ValueError("step_names must match steps")
-
-    flags = [F.coalesce(c.cast("boolean"), F.lit(False)) for c in steps]
-    ord_struct = F.struct(F.col(TIME).alias("t"), F.col(SUBSORT).alias("s"))
-    keep = reduce(lambda a, b: a | b, flags)
-    if unless is not None:
-        unless = F.coalesce(unless.cast("boolean"), F.lit(False))
-        keep = keep | unless
-    df = tl.df.filter(keep)
-
-    w = (
-        W.partitionBy(KEY)
-        .orderBy(TIME, SUBSORT)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    for i in range(k):
-        cond = flags[i]
-        if i > 0:
-            prev = F.col(f"__r{i - 1}")
-            cond = cond & prev.isNotNull() & (ord_struct > prev)
-            if within is not None:
-                cond = cond & (
-                    F.col(TIME) <= F.col("__r0.t") + F.expr(f"INTERVAL {within}")
-                )
-            if unless is not None:
-                # candidate must precede the first abort row (a row that
-                # is both step-i and abort is killed: abort wins ties)
-                u = F.col("__u")
-                cond = cond & (u.isNull() | (ord_struct < u))
-        # Chained running mins: each references the previous one, so the
-        # Window operators stack on the SAME partitioning+sort (one
-        # exchange for the whole chain).
-        df = df.withColumn(f"__r{i}", F.min(F.when(cond, ord_struct)).over(w))
-        if i == 0 and unless is not None:
-            # first abort row strictly after the anchor (an anchor row
-            # that itself matches ``unless`` does not kill its own match)
-            ucond = unless & F.col("__r0").isNotNull() & (ord_struct > F.col("__r0"))
-            df = df.withColumn("__u", F.min(F.when(ucond, ord_struct)).over(w))
-
-    g = df.groupBy(KEY).agg(
-        *[F.max(f"__r{i}").alias(f"__m{i}") for i in range(k)]
-    )
-    step_reached = reduce(
-        lambda a, b: a + b,
-        [F.when(F.col(f"__m{i}").isNotNull(), 1).otherwise(0) for i in range(k)],
-    )
-    return g.select(
-        KEY,
-        step_reached.cast("int").alias("step_reached"),
-        *[F.col(f"__m{i}.t").alias(f"t_{names[i]}") for i in range(k)],
-        F.col(f"__m{k - 1}").isNotNull().alias("completed"),
-    )
+    return match_pattern(tl, _funnel_steps(steps, step_names), within, unless)
 
 
 def match_pattern(
@@ -180,9 +165,8 @@ def match_pattern(
     unless: Column | None = None,
 ) -> DataFrame:
     """Quantified per-entity pattern matching — MATCH_RECOGNIZE-style
-    ``A B+ C?`` sequences with per-step aggregates, generalizing
-    :func:`match_funnel` (which keeps the plain-funnel + ``unless``
-    surface).
+    ``A B+ C?`` sequences with per-step aggregates; :func:`match_funnel`
+    is its all-``"1"`` case.
 
     Semantics (first-occurrence / reluctant quantifiers — greedy-minimal
     matching, so no backtracking exists and the lowering stays a single
@@ -208,20 +192,22 @@ def match_pattern(
       may be null on completed entities. A pattern cannot START with an
       observer (the anchor must be a required step).
 
-    ``unless`` is the abort predicate ("... with no X in between", the
-    funnel's rule generalized): the FIRST event matching it strictly
-    after the match anchor (the first required step's first occurrence;
-    an anchor row matching ``unless`` does not kill its own match)
-    voids every required (sub-)hit at-or-after it — abort wins ties —
-    and bounds every consumption/observation window strictly before
-    it. Exact without backtracking for the same greedy-minimal reason
-    as the funnel.
+    ``unless`` is the abort predicate ("... with no X in between"): the
+    FIRST event matching it strictly after the match anchor (the first
+    required step's first occurrence; an anchor row matching ``unless``
+    does not kill its own match) voids every required (sub-)hit
+    at-or-after it — abort wins ties — and bounds every
+    consumption/observation window strictly before it. Exact without
+    backtracking: each required instant is the earliest achievable
+    given the anchor, so a match avoiding the abort row exists iff the
+    greedy one does; the lowering adds one more chained running-min
+    (the first abort row after the anchor).
 
     Returns one row per entity having >= 1 event matching any step:
     ``(_key, step_reached, t_<name> per step, n_<name> + aggs per "+"
     step, completed)``.
 
-    Scale posture — identical to :func:`match_funnel`: ONE shuffle.
+    Scale posture (module docstring): ONE shuffle.
     The chained running-min structs share one
     ``partitionBy(_key).orderBy(_time,_subsort)`` exchange+sort; the
     per-step FINAL instants are full-partition-frame windows over the
@@ -231,44 +217,13 @@ def match_pattern(
     per-entity hash aggregate the exchange already satisfies. State per
     row stays k small structs — no per-entity event buffering.
 
-    Reference: sparrow has no quantified-pattern operator; this extends
-    the funnel per the north rule's CEP term. Streaming twin:
+    Reference: sparrow has no quantified-pattern operator; this is the
+    north rule's CEP term. Streaming twin:
     streaming/cep.py::pattern_stream (equivalence-tested).
     """
     steps = list(steps)
-    if len(steps) < 2:
-        raise ValueError("a pattern needs at least two steps")
-    names = [s.name for s in steps]
-    if len(set(names)) != len(names):
-        raise ValueError(f"step names must be unique, got {names}")
-    for s in steps:
-        if s.quant not in ("1", "+", "?", "*"):
-            raise ValueError(
-                f"step {s.name!r}: quant must be '1', '+', '?' or '*'"
-            )
-        if s.aggs and s.quant not in ("+", "*"):
-            raise ValueError(f"step {s.name!r}: aggregates need quant '+' or '*'")
-        for out, fn, _col in s.aggs:
-            if fn not in ("sum", "min", "max"):
-                raise ValueError(f"step {s.name!r}: agg fn {fn!r} not in sum/min/max")
-        if s.min_count < 1:
-            raise ValueError(f"step {s.name!r}: min_count must be >= 1")
-        if s.min_count > 1 and s.quant != "+":
-            raise ValueError(f"step {s.name!r}: min_count needs quant '+'")
-    if steps[0].quant in ("?", "*"):
-        raise ValueError("a pattern cannot start with an optional step")
-    req = [i for i, s in enumerate(steps) if s.quant in ("1", "+")]
+    req, rank_of = _validate_steps(steps)
     k = len(req)
-    if k < 1:
-        raise ValueError("a pattern needs at least one required step")
-    # required-chain rank of step i; for observers, the rank of the
-    # nearest PRECEDING required step (the anchor)
-    rank_of = {}
-    r = -1
-    for i, s in enumerate(steps):
-        if s.quant in ("1", "+"):
-            r += 1
-        rank_of[i] = r
 
     flags = [F.coalesce(s.pred.cast("boolean"), F.lit(False)) for s in steps]
     ord_struct = F.struct(F.col(TIME).alias("t"), F.col(SUBSORT).alias("s"))

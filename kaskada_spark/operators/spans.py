@@ -192,8 +192,9 @@ def _winnow_arrow(
       duplicate positions cannot exist, so one ``np.unique`` dedups
       and orders the whole batch;
     - fingerprints: one fancy-index gather of the selected (n_sel, w)
-      gram matrix, then a single tight bytes->md5 pass (identical
-      bytes to the per-gram " ".join(str(t)) the Catalyst twin hashes).
+      gram matrix, then one ``hashlib.md5`` call per selected gram in
+      a Python comprehension over its space-joined decimal tokens (the
+      same bytes the Catalyst twin hashes).
     """
     import hashlib
 

@@ -1,15 +1,16 @@
-"""Streaming CEP: per-entity first-occurrence funnels and quantified
-patterns.
+"""Streaming CEP: per-entity quantified patterns, and first-occurrence
+funnels as their all-``"1"`` special case.
 
-Streaming twin of operators/cep.py::match_funnel. Each entity's state
-carries (stage, per-stage hit instants) plus a small buffer of
+Streaming twin of operators/cep.py::match_pattern (``funnel_stream``
+names the steps and calls ``pattern_stream``, as ``match_funnel`` does
+in batch). Each entity's state carries (stage, per-stage hit instants,
+consumption and observer progress) plus a small buffer of
 not-yet-settled rows; rows SETTLE in (time, subsort) order once the
 watermark passes them (the same settle-at-watermark discipline as
 streaming/merge.py and streaming/shift.py), so out-of-order arrival
 within the watermark delay cannot corrupt the match order.
 
-Key property that keeps state tiny: a settled row that does not advance
-the funnel can NEVER matter later — stages need strictly increasing
+Key property that keeps state tiny: stages need strictly increasing
 (time, subsort), so a later stage can never consume an earlier row.
 Settled rows are therefore processed once and discarded; state is
 O(in-flight watermark window) per entity while matching and a O(1)
@@ -17,17 +18,18 @@ tombstone after completion. Stragglers at-or-behind the settled
 high-water are dropped (bounded lateness; Spark keeps rows at exactly
 the watermark, so the machine enforces the drop itself).
 
-Emission: ONE row per entity, at the micro-batch where the completing
-step settles — (key, t_<name> per step). Batch `match_funnel` rows with
-``completed = true`` equal the streamed output on ordered replay
-(tests/test_cep.py::test_stream_funnel_equals_batch).
+Emission: ONE row per entity, once the completing step settles and no
+consumption window remains open. For a funnel that is the micro-batch
+where its last step settles — (key, t_<name> per step). Batch
+``completed`` rows equal the streamed output on ordered replay
+(tests/test_cep.py::test_stream_funnel_equals_batch,
+test_stream_pattern_equals_batch).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 from functools import reduce
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kaskada_spark.operators.cep import _funnel_steps, _validate_steps
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
 
 _NEG = -(2**63)
@@ -50,214 +53,26 @@ def funnel_stream(
     watermark: str = "0 seconds",
     unless: Column | None = None,
 ) -> DataFrame:
-    """Streaming first-occurrence funnel over ``steps`` predicates.
+    """Streaming first-occurrence funnel over ``steps`` predicates: the
+    all-``"1"`` :func:`pattern_stream`.
 
     ``tdf`` is a streaming frame in the universal shape; emits one row
     per entity that completes all steps: ``(_key, t_<name>...)``.
-    ``unless`` is the abort predicate (see operators/cep.py). The abort
-    row needs no persistent state: rows settle in time order, so by the
-    end of the micro-batch in which the first post-anchor abort row
-    settles, the match has either already completed (every hit precedes
-    the abort) or can never complete (every future row follows it) —
-    the machine completes or tombstones within that invocation.
+    ``unless`` is the abort predicate (see operators/cep.py).
     """
-    k = len(steps)
-    if k < 2:
-        raise ValueError("a funnel needs at least two steps")
-    names = list(step_names) if step_names else [f"step{i + 1}" for i in range(k)]
-    if len(names) != k:
-        raise ValueError("step_names must match steps")
-    if k > 61:
-        raise ValueError("at most 61 steps (flag bitmask + abort bit)")
-    within_ns = int(pd.Timedelta(within).value) if within is not None else None
-
-    tdf = tdf.withWatermark(TIME, watermark)
-    flag_cols = [
-        F.coalesce(c.cast("boolean"), F.lit(False)).alias(f"__p{i}")
-        for i, c in enumerate(steps)
-    ]
-    if unless is not None:
-        flag_cols.append(
-            F.coalesce(unless.cast("boolean"), F.lit(False)).alias(f"__p{k}")
-        )
-    n_flags = len(flag_cols)
-    pre = tdf.select(F.col(TIME), F.col(SUBSORT), F.col(KEY), *flag_cols).filter(
-        reduce(lambda a, b: a | b, [F.col(f"__p{i}") for i in range(n_flags)])
+    return pattern_stream(
+        tdf, _funnel_steps(steps, step_names), within, watermark, unless
     )
-
-    out_schema = T.StructType(
-        [T.StructField(KEY, tdf.schema[KEY].dataType)]
-        + [T.StructField(f"t_{n}", T.TimestampType()) for n in names]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("stage", T.IntegerType()),
-            T.StructField("done", T.BooleanType()),
-            T.StructField("hits_t", T.ArrayType(T.LongType())),
-            T.StructField("hits_s", T.ArrayType(T.LongType())),
-            T.StructField("bt", T.ArrayType(T.LongType())),
-            T.StructField("bs", T.ArrayType(T.LongType())),
-            T.StructField("bf", T.ArrayType(T.LongType())),
-            T.StructField("settled_t", T.LongType()),
-            T.StructField("settled_s", T.LongType()),
-        ]
-    )
-    func = _make_funnel_fn(k, within_ns, names, has_unless=unless is not None)
-    return pre.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-def _make_funnel_fn(
-    k: int, within_ns: int | None, names: list[str], has_unless: bool = False
-):
-    n_flags = k + 1 if has_unless else k
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stage, done, hits_t, hits_s, bt, bs, bf, settled_t, settled_s = state.get
-            hits_t, hits_s = list(hits_t), list(hits_s)
-            bt = np.asarray(bt, dtype=np.int64)
-            bs = np.asarray(bs, dtype=np.int64)
-            bf = np.asarray(bf, dtype=np.int64)
-        else:
-            stage, done = 0, False
-            hits_t, hits_s = [], []
-            bt = bs = bf = np.empty(0, dtype=np.int64)
-            settled_t, settled_s = _NEG, _NEG
-
-        for pdf in pdfs:
-            if done or pdf.empty:
-                continue
-            t = pdf[TIME].astype("int64").to_numpy()
-            s = pdf[SUBSORT].to_numpy(dtype=np.int64)
-            # straggler drop: at-or-behind the settled high-water
-            fresh = (t > settled_t) | ((t == settled_t) & (s > settled_s))
-            if not fresh.any():
-                continue
-            flags = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(n_flags):
-                flags |= pdf[f"__p{i}"].to_numpy(dtype=np.int64) << i
-            bt = np.concatenate([bt, t[fresh]])
-            bs = np.concatenate([bs, s[fresh]])
-            bf = np.concatenate([bf, flags[fresh]])
-
-        rows = None
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        if not done and len(bt):
-            order = np.lexsort((bs, bt))
-            bt, bs, bf = bt[order], bs[order], bf[order]
-            settled = bt <= wm_ns
-            n_settled = int(settled.sum())
-            if n_settled:
-                st_, ss_, sf_ = bt[:n_settled], bs[:n_settled], bf[:n_settled]
-                u_t = u_s = None
-                # stage-loop advance (vectorized per stage, never per row)
-                while stage < k:
-                    if has_unless and stage >= 1 and u_t is None:
-                        # first abort row strictly after the anchor; it
-                        # is pass-local (see funnel_stream docstring)
-                        au = ((sf_ >> k) & 1).astype(bool)
-                        au &= (st_ > hits_t[0]) | (
-                            (st_ == hits_t[0]) & (ss_ > hits_s[0])
-                        )
-                        aidx = np.flatnonzero(au)
-                        if len(aidx):
-                            u_t = int(st_[aidx[0]])
-                            u_s = int(ss_[aidx[0]])
-                    cand = ((sf_ >> stage) & 1).astype(bool)
-                    if stage > 0:
-                        pt, ps = hits_t[-1], hits_s[-1]
-                        cand &= (st_ > pt) | ((st_ == pt) & (ss_ > ps))
-                        if within_ns is not None:
-                            cand &= st_ <= hits_t[0] + within_ns
-                        if u_t is not None:
-                            # abort wins ties on the same row
-                            cand &= (st_ < u_t) | ((st_ == u_t) & (ss_ < u_s))
-                    idx = np.flatnonzero(cand)
-                    if not len(idx):
-                        break
-                    hits_t.append(int(st_[idx[0]]))
-                    hits_s.append(int(ss_[idx[0]]))
-                    stage += 1
-                settled_t = int(st_[-1])
-                settled_s = int(ss_[-1])
-                bt, bs, bf = bt[n_settled:], bs[n_settled:], bf[n_settled:]
-                if has_unless and u_t is not None and stage < k:
-                    # a settled abort precedes every future row: dead
-                    done = True
-                    bt = bs = bf = np.empty(0, dtype=np.int64)
-                if stage == k:
-                    done = True
-                    bt = bs = bf = np.empty(0, dtype=np.int64)
-                    rows = pd.DataFrame(
-                        {
-                            KEY: [key[0]],
-                            **{
-                                f"t_{names[i]}": [pd.Timestamp(hits_t[i])]
-                                for i in range(k)
-                            },
-                        }
-                    )
-        # horizon expiry: with >=1 stage hit and the within window past,
-        # no later row can advance the funnel — tombstone, free buffers
-        if (
-            not done
-            and within_ns is not None
-            and stage >= 1
-            and stage < k
-            and wm_ns > hits_t[0] + within_ns
-        ):
-            done = True
-            bt = bs = bf = np.empty(0, dtype=np.int64)
-
-        state.update(
-            (
-                int(stage),
-                bool(done),
-                [int(x) for x in hits_t],
-                [int(x) for x in hits_s],
-                [int(x) for x in bt],
-                [int(x) for x in bs],
-                [int(x) for x in bf],
-                int(settled_t),
-                int(settled_s),
-            )
-        )
-        if not done and len(bt):
-            # wake when the watermark passes the earliest unsettled row
-            # (1ms early — strict-inequality timer rule)
-            state.setTimeoutTimestamp(
-                max(int(bt.min()) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if rows is not None:
-            yield rows
-
-    return update
 
 
 def _build_pattern_spec(steps, within: str | None):
     """Validate a PatternStep list and derive the state-machine spec —
     shared by pattern_stream and the Spark-free property-test harness
     so the two can never drift."""
-    names = [s.name for s in steps]
-    req = [i for i, s in enumerate(steps) if s.quant in ("1", "+")]
+    req, rank_of = _validate_steps(steps)
     k = len(req)
-    if k < 1 or steps[0].quant in ("?", "*"):
-        raise ValueError("pattern must start with a required step")
-    for s in steps:
-        if getattr(s, "min_count", 1) < 1:
-            raise ValueError(f"step {s.name!r}: min_count must be >= 1")
-        if getattr(s, "min_count", 1) > 1 and s.quant != "+":
-            raise ValueError(f"step {s.name!r}: min_count needs quant '+'")
     if len(steps) > 62:
         raise ValueError("at most 62 steps (flag bitmask)")
-    rank_of, r = {}, -1
-    for i, s in enumerate(steps):
-        if s.quant in ("1", "+"):
-            r += 1
-        rank_of[i] = r
     trailing_open = steps[req[-1]].quant == "+" or any(
         s.quant in ("?", "*") and rank_of[i] == k - 1 for i, s in enumerate(steps)
     )
@@ -287,14 +102,14 @@ def _build_pattern_spec(steps, within: str | None):
         "n_steps": len(steps),
         "req": req,
         "rank_of": rank_of,
-        "names": names,
+        "names": [s.name for s in steps],
         "quants": [s.quant for s in steps],
         "plus_steps": plus_steps,
         "obs_steps": obs_steps,
         "n_v": len(vcols),
         "acc_layout": acc_layout,
         "star_steps": [i for i, s in enumerate(steps) if s.quant == "*"],
-        "min_counts": [getattr(steps[i], "min_count", 1) for i in req],
+        "min_counts": [steps[i].min_count for i in req],
         "within_ns": within_ns,
         "trailing_open": trailing_open,
         "agg_outs": {
@@ -324,9 +139,9 @@ def pattern_stream(
     the anchor's horizon; otherwise the row emits the micro-batch in
     which the completing step settles.
 
-    Same settle-at-watermark discipline as funnel_stream: rows buffer
-    until the watermark passes them, settle in (time, subsort) order,
-    and stragglers at-or-behind the settled high-water are dropped.
+    Rows buffer until the watermark passes them, settle in (time,
+    subsort) order, and stragglers at-or-behind the settled high-water
+    are dropped (module docstring).
     Per-pass consumption with CURRENT knowledge is exact: rows settle
     in order, so a row accumulated while the next required step was
     unmatched necessarily precedes that step's (later-settling) matched

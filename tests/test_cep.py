@@ -476,18 +476,27 @@ def test_pattern_within_bounds_trailing_consumption(spark):
 
 def test_pattern_validation(spark):
     from kaskada_spark.operators.cep import PatternStep, match_pattern
+    from kaskada_spark.streaming.cep import pattern_stream
 
     tl = _tlv(spark, [("e", 0, 0, "a", 1)])
-    with pytest.raises(ValueError, match="optional"):
-        match_pattern(tl, [PatternStep("x", F.col("lbl") == "a", "?"),
-                           PatternStep("y", F.col("lbl") == "b")])
-    with pytest.raises(ValueError, match="unique"):
-        match_pattern(tl, [PatternStep("x", F.col("lbl") == "a"),
-                           PatternStep("x", F.col("lbl") == "b")])
-    with pytest.raises(ValueError, match="quant '\\+'"):
-        match_pattern(tl, [PatternStep("x", F.col("lbl") == "a",
-                                       aggs=[("s", "sum", "val")]),
-                           PatternStep("y", F.col("lbl") == "b")])
+    a, b, c = (F.col("lbl") == x for x in "abc")
+    bad = [
+        ("optional", [PatternStep("x", a, "?"), PatternStep("y", b)]),
+        ("unique", [PatternStep("x", a), PatternStep("x", b)]),
+        ("quant '\\+'", [PatternStep("x", a, aggs=[("s", "sum", "val")]),
+                         PatternStep("y", b)]),
+        ("sum/min/max", [PatternStep("x", a),
+                         PatternStep("y", b, "+", aggs=[("s", "avg", "val")]),
+                         PatternStep("z", c)]),
+        ("quant must be", [PatternStep("x", a), PatternStep("y", b, "{2}"),
+                           PatternStep("z", c)]),
+        ("at least two", [PatternStep("x", a)]),
+    ]
+    for match, steps in bad:
+        with pytest.raises(ValueError, match=match):
+            match_pattern(tl, steps)
+        with pytest.raises(ValueError, match=match):
+            pattern_stream(tl.df, steps)
 
 
 def _brute_pattern(events, steps, within=None):

@@ -715,42 +715,62 @@ def test_pattern_machine_matches_batch_model_fuzz():
     """pattern_stream's state machine == the batch reference model on
     randomized per-entity event sets split at randomized micro-batch
     boundaries (in-order feeding; the settle logic is exercised by the
-    Spark-level out-of-order tests)."""
+    Spark-level out-of-order tests). The all-``"1"`` spec is the funnel
+    shape (``funnel_stream``), also checked against the funnel model."""
     import random
 
     from tests.test_cep import _brute_pattern
 
-    rng = random.Random(23)
-    spec = [("a", "1"), ("b", "+"), ("d", "?"), ("c", "1")]
-    n_emitted = 0
-    for trial in range(300):
-        n = rng.randint(1, 25)
-        events = sorted(
-            (rng.randint(0, 500), s, rng.choice("abcdx"), rng.randint(1, 9))
-            for s in range(n)
-        )
-        flags = [(t, s, (l == "a", l == "b", l == "d", l == "c"), v)
-                 for t, s, l, v in events]
-        exp = _brute_pattern(flags, spec, within=300)
-        cuts = sorted(rng.randint(0, n) for _ in range(rng.randint(0, 4)))
-        got = _drive_pattern(spec, 300, events, cuts)
-        if not exp["completed"]:
-            assert got is None, (trial, exp)
-            continue
-        assert got is not None, (trial, exp)
-        row, base = got
-        ts = lambda x: base + pd.Timedelta(seconds=x) if x is not None else None
-        for nm in ("a", "b", "c", "d"):
-            g = row[f"t_{nm}"]
-            e = ts(exp[f"t_{nm}"])
-            if e is None:
-                assert pd.isna(g), (trial, nm, g)
-            else:
-                assert g == e, (trial, nm, g, e)
-        assert row["n_b"] == exp["n_b"], (trial, row["n_b"], exp["n_b"])
-        assert row["sum_b"] == pytest.approx(float(exp["sum_b"])), trial
-        n_emitted += 1
-    assert n_emitted >= 40
+    cases = [
+        ([("a", "1"), ("b", "+"), ("d", "?"), ("c", "1")], "abcdx", 23),
+        ([("a", "1"), ("b", "1"), ("c", "1")], "abcx", 61),
+    ]
+    for spec, alphabet, seed in cases:
+        rng = random.Random(seed)
+        n_emitted = 0
+        for trial in range(300):
+            n = rng.randint(1, 25)
+            events = sorted(
+                (rng.randint(0, 500), s, rng.choice(alphabet), rng.randint(1, 9))
+                for s in range(n)
+            )
+            flags = [(t, s, tuple(l == nm for nm, _q in spec), v)
+                     for t, s, l, v in events]
+            exp = _brute_pattern(flags, spec, within=300)
+            cuts = sorted(rng.randint(0, n) for _ in range(rng.randint(0, 4)))
+            got = _drive_pattern(spec, 300, events, cuts)
+            _check_pattern_row(got, exp, spec, flags, 300, trial)
+            n_emitted += got is not None
+        assert n_emitted >= 40, spec
+
+
+def _check_pattern_row(got, exp, spec, flags, within, trial):
+    """Assert one `_drive_pattern` result against the `_brute_pattern`
+    row, and for an all-``"1"`` spec against `_brute_funnel` too."""
+    from tests.test_cep import _brute_funnel
+
+    if all(q == "1" for _nm, q in spec):
+        hits = _brute_funnel([(t, s, fl, *ab) for t, s, fl, _v, *ab in flags],
+                             len(spec), within=within)
+        assert exp["completed"] == (len(hits) == len(spec)), (trial, hits, exp)
+        assert [exp[f"t_{nm}"] for nm, _q in spec] == [h[0] for h in hits] + [
+            None] * (len(spec) - len(hits)), (trial, hits, exp)
+    if not exp["completed"]:
+        assert got is None, (trial, exp)
+        return
+    assert got is not None, (trial, exp)
+    row, base = got
+    ts = lambda x: base + pd.Timedelta(seconds=x) if x is not None else None
+    for nm, _q in spec:
+        g, e = row[f"t_{nm}"], ts(exp[f"t_{nm}"])
+        if e is None:
+            assert pd.isna(g), (trial, nm, g)
+        else:
+            assert g == e, (trial, nm, g, e)
+    for nm, q in spec:
+        if q == "+":
+            assert row[f"n_{nm}"] == exp[f"n_{nm}"], (trial, row[f"n_{nm}"], exp)
+            assert row[f"sum_{nm}"] == pytest.approx(float(exp[f"sum_{nm}"])), trial
 
 
 def test_pattern_machine_trailing_plus_fuzz():
@@ -881,43 +901,34 @@ def test_pattern_machine_min_count_fuzz():
 def test_pattern_machine_unless_fuzz():
     """`a b+ d? c UNLESS x` across micro-batch splits: abort voids later
     hits, bounds consumption/observation, kills or closes within the
-    abort's settle pass — vs the batch model."""
+    abort's settle pass — vs the batch model. The all-``"1"`` spec is
+    the funnel shape with ``unless``."""
     import random
 
     from tests.test_cep import _brute_pattern
 
-    rng = random.Random(53)
-    spec = [("a", "1"), ("b", "+"), ("d", "?"), ("c", "1")]
-    n_emitted = n_aborted_effect = 0
-    for trial in range(300):
-        n = rng.randint(1, 30)
-        events = sorted(
-            (rng.randint(0, 500), s, rng.choice("abcdxy"), rng.randint(1, 9))
-            for s in range(n)
-        )
-        flags = [(t, s, (l == "a", l == "b", l == "d", l == "c"), v, l == "x")
-                 for t, s, l, v in events]
-        exp = _brute_pattern(flags, spec, within=300)
-        cuts = sorted(rng.randint(0, n) for _ in range(rng.randint(0, 5)))
-        got = _drive_pattern(spec, 300, events, cuts, unless_label="x")
-        if not exp["completed"]:
-            assert got is None, (trial, exp)
-            if any(a for *_x, a in flags):
-                n_aborted_effect += 1
-            continue
-        assert got is not None, (trial, exp)
-        row, base = got
-        ts = lambda x: base + pd.Timedelta(seconds=x) if x is not None else None
-        for nm in ("a", "b", "d", "c"):
-            g, e = row[f"t_{nm}"], ts(exp[f"t_{nm}"])
-            if e is None:
-                assert pd.isna(g), (trial, nm, g)
-            else:
-                assert g == e, (trial, nm, g, e)
-        assert row["n_b"] == exp["n_b"], (trial, row["n_b"], exp["n_b"])
-        assert row["sum_b"] == pytest.approx(float(exp["sum_b"])), trial
-        n_emitted += 1
-    assert n_emitted >= 20 and n_aborted_effect >= 20
+    cases = [
+        ([("a", "1"), ("b", "+"), ("d", "?"), ("c", "1")], "abcdxy", 53, 20),
+        ([("a", "1"), ("b", "1"), ("c", "1")], "abcxy", 67, 30),
+    ]
+    for spec, alphabet, seed, min_emitted in cases:
+        rng = random.Random(seed)
+        n_emitted = n_aborted_effect = 0
+        for trial in range(300):
+            n = rng.randint(1, 30)
+            events = sorted(
+                (rng.randint(0, 500), s, rng.choice(alphabet), rng.randint(1, 9))
+                for s in range(n)
+            )
+            flags = [(t, s, tuple(l == nm for nm, _q in spec), v, l == "x")
+                     for t, s, l, v in events]
+            exp = _brute_pattern(flags, spec, within=300)
+            cuts = sorted(rng.randint(0, n) for _ in range(rng.randint(0, 5)))
+            got = _drive_pattern(spec, 300, events, cuts, unless_label="x")
+            _check_pattern_row(got, exp, spec, flags, 300, trial)
+            n_emitted += got is not None
+            n_aborted_effect += got is None and any(a for *_x, a in flags)
+        assert n_emitted >= min_emitted and n_aborted_effect >= 20, spec
 
 
 def test_pattern_machine_unless_trailing_fuzz():
