@@ -40,6 +40,18 @@ def get_spark(
     to #cores, and 32 GC threads thrash this VM during young
     collections. On a real multi-executor cluster the same settings
     apply per executor (8-core executors are the sweet spot).
+
+    PySpark's DataFrame debugging
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off by default
+    here. While it is on, every ``pyspark.sql.functions`` call and
+    ``Column`` method walks the Python stack and makes about five extra
+    py4j calls to record its call site for error messages (``F.col``
+    took 1.3 ms with it and 0.3 ms without, on a 4-vCPU VM). One query
+    of the perfbench rotation makes 21-86 such calls, and for a Fenl
+    query the recorded sites point inside ``fenl/compiler.py``, not at
+    user code. Pass it in ``extra_conf`` to turn it back on. It is a
+    static conf, fixed when the session is created, and PySpark reads
+    it once per process.
     """
     cpus = DEFAULT_CPUS
     if master is None:
@@ -73,6 +85,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

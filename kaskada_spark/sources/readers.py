@@ -11,11 +11,20 @@ partitioning on the entity bucket + time, snapshot isolation for the
 exactly-once sink). The sandbox image has no Iceberg jars, so the
 Iceberg path is gated behind a runtime check and everything falls back
 to plain parquet with the same layout.
+
+``read_table`` keeps the schema Spark inferred for each table, so only
+the first read of a table runs Spark's footer-reading inference job.
+On plain parquet this stands in for an Iceberg table, whose schema is
+read from snapshot metadata instead of from data-file footers: a cached
+schema is reused only while every file under the table path has the
+same name, size, mtime and inode as when it was inferred.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,10 +46,49 @@ def table_names() -> tuple[str, ...]:
     return TABLES
 
 
+#: session -> {absolute table path: (file listing, inferred schema)}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple:
+    """(relative name, size, mtime_ns, inode) of every file under
+    ``path``, sorted; raises OSError when ``path`` cannot be stat'ed."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+    out = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            st = os.stat(full)
+            out.append(
+                (os.path.relpath(full, path), st.st_size, st.st_mtime_ns, st.st_ino)
+            )
+    return tuple(sorted(out))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic-benchmark table (columnar scan; Catalyst pushes
-    projections/filters into the parquet reader)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    projections/filters into the parquet reader).
+
+    The first read infers the schema from parquet footers (one Spark
+    job); later reads of unchanged files in the same session pass the
+    cached schema and start no job (see the module docstring). A path
+    that cannot be stat'ed is read uncached, so Spark raises its usual
+    error."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        listing = _listing(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    tables = _SCHEMAS.setdefault(spark, {})
+    cached = tables.get(key)
+    if cached is not None and cached[0] == listing:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    tables[key] = (listing, df.schema)
+    return df
 
 
 def parquet_column_bounds(path: str, column: str) -> tuple | None:

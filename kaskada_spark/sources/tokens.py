@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kaskada_spark.sources.readers import read_table
+
 TOKEN_PATTERN = "[a-z0-9]+"
 EPOCH = "2024-01-01 00:00:00"
 
@@ -40,8 +42,7 @@ def tokenize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's prepare-synthesized subsort approach,
     prepare/column_behavior.rs:106,146).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tokenize_df(docs)
+    return tokenize_df(read_table(spark, sf_dir, "documents"))
 
 
 def tokenize_df(docs: DataFrame) -> DataFrame:

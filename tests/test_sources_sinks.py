@@ -5,12 +5,19 @@ destinations.proto:10-16)."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from kaskada_spark.sinks.exactly_once import ExactlyOnceSink
-from kaskada_spark.sources.readers import read_csv, read_inline_csv
+from kaskada_spark.sources.readers import read_csv, read_inline_csv, read_table
 from kaskada_spark.timeline import Timeline
 
 INLINE = """time,key,m,n
@@ -40,6 +47,74 @@ def test_csv_path_source(spark, tmp_path):
     # explicit schema path skips inference
     df2 = read_csv(spark, p, schema="time timestamp, key string, m int, n int")
     assert df2.schema["m"].dataType.simpleString() == "int"
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` starts, by job group."""
+    sc = spark.sparkContext
+    group, marker = (f"test-{uuid.uuid4().hex}" for _ in range(2))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        # job starts reach the status tracker through an ordered,
+        # asynchronous listener bus: once a later marker job shows up,
+        # every job fn() started has been recorded
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker)
+    return tracker.getJobIdsForGroup(group)
+
+
+def test_read_table_reuses_schema_until_files_change(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    first = []
+    assert _job_ids(spark, lambda: first.append(read_table(spark, str(tmp_path), "t")))
+    again = []
+    assert _job_ids(spark, lambda: again.append(read_table(spark, str(tmp_path), "t"))) == []
+    assert again[0].schema == first[0].schema
+    assert sorted(again[0].collect()) == sorted(first[0].collect())
+
+    pq.write_table(pa.table({"k": [3], "v": ["c"], "w": [1.5]}), path)
+    changed = read_table(spark, str(tmp_path), "t")
+    assert changed.columns == ["k", "v", "w"]
+    assert [tuple(r) for r in changed.collect()] == [(3, "c", 1.5)]
+
+
+def test_read_table_missing_path_raises_like_spark(spark, tmp_path):
+    with pytest.raises(AnalysisException) as plain:
+        spark.read.parquet(str(tmp_path / "nope.parquet"))
+    with pytest.raises(type(plain.value)):
+        read_table(spark, str(tmp_path), "nope")
+
+
+def test_get_spark_turns_dataframe_debugging_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"  # the fixture is a get_spark() session
+    assert not is_debugging_enabled()
+    # a static conf: only a new JVM can take another value
+    code = (
+        "from pyspark.errors.utils import is_debugging_enabled\n"
+        "from kaskada_spark.session import get_spark\n"
+        f"s = get_spark(master='local[1]', extra_conf={{{key!r}: 'true'}})\n"
+        f"print(s.conf.get({key!r}), is_debugging_enabled())\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    assert out.split()[-2:] == ["true", "True"]
 
 
 def test_csv_sink_roundtrip(spark, tmp_path):
