@@ -14,11 +14,15 @@ API and lets Catalyst/Tungsten/AQE pick physical strategies, which is
 what makes it viable at 100 TB / 1000-executor scale.
 """
 
-from kaskada_spark.fenl import fenl
-from kaskada_spark.fenl.materialize import materialize_fenl
-from kaskada_spark.session import get_spark
-from kaskada_spark.timeline import Timeline
-from kaskada_spark.windows import Since, Sliding, Tick, daily, hourly, minutely, monthly, yearly
+from kaskada_spark import _worker
+
+_worker.install()
+
+from kaskada_spark.fenl import fenl  # noqa: E402
+from kaskada_spark.fenl.materialize import materialize_fenl  # noqa: E402
+from kaskada_spark.session import get_spark  # noqa: E402
+from kaskada_spark.timeline import Timeline  # noqa: E402
+from kaskada_spark.windows import Since, Sliding, Tick, daily, hourly, minutely, monthly, yearly  # noqa: E402
 
 __all__ = [
     "get_spark", "Timeline", "Since", "Sliding", "Tick", "fenl",
