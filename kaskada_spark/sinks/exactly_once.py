@@ -11,18 +11,57 @@ rows … resumable from checkpoint with per-partition lineage + metrics"):
   `REPLACE PARTITIONS`/MERGE commit keyed by the epoch id; parquet
   directories are the sandbox stand-in (no Iceberg jars in this image).
 - Lineage lands under ``lineage_dir/batch_id=<epoch_id>/`` — one row per
-  output partition: (batch_id, partition, n_rows, min/max event time).
-  A resume can validate that replayed batches reproduce identical
-  partition metrics (the reference validates snapshot compatibility by
-  plan hash + max event time, compute_store.rs:36-60).
+  non-empty output partition: (partition, n_rows, min/max event time,
+  batch_id). ``n_rows`` is the partition's exact row count;
+  ``min_event_time``/``max_event_time`` are the whole micro-batch's
+  event-time range, repeated on each of its rows (a partition's own
+  range stays recoverable from its ``part-<id>`` output file). A resume
+  can validate a replayed batch by its row counts and max event time
+  (the reference validates snapshot compatibility by plan hash + max
+  event time, compute_store.rs:36-60).
+- One Spark job per call: the output write. The lineage is observed
+  inside it (``DataFrame.observe`` over a ``spark_partition_id()``
+  helper column: a ``histogram_numeric`` of partition ids gives the
+  per-partition counts, ``min``/``max`` the event-time range), so the
+  batch is neither persisted nor read twice. The few lineage rows are
+  built with pyarrow on the driver and written as one parquet file
+  through the path's Hadoop ``FileSystem`` (``file:``, ``s3a:``, …),
+  which starts no Spark job. The batch's old lineage is deleted before
+  the write, as the overwrite drops its old output, so a failed write
+  leaves no lineage behind.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# histogram_numeric keeps one exact bin per distinct value until it
+# holds this many; every row of a task has the same spark_partition_id,
+# so the per-partition counts are exact at any partition count. Bins are
+# allocated as values arrive, so the bound costs nothing.
+_MAX_BINS = 2**31 - 1
+
+
+def _lineage_table(m: dict, batch_id: int, timed: bool) -> pa.Table:
+    """The lineage rows of one micro-batch from its observed metrics: one
+    row per non-empty partition, the batch's event-time range on each."""
+    parts = sorted((int(b["x"]), int(b["y"])) for b in m["parts"] or [])
+    n = len(parts)
+    cols = {
+        "partition": pa.array([p for p, _ in parts], pa.int32()),
+        "n_rows": pa.array([c for _, c in parts], pa.int64()),
+    }
+    if timed:
+        ts = pa.timestamp("us", tz="UTC")
+        cols["min_event_time"] = pa.array([m["lo"]] * n, ts)
+        cols["max_event_time"] = pa.array([m["hi"]] * n, ts)
+    cols["batch_id"] = pa.array([batch_id] * n, pa.int32())
+    return pa.table(cols)
 
 
 class ExactlyOnceSink:
@@ -43,28 +82,43 @@ class ExactlyOnceSink:
         self.fmt = fmt
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
-        df = df.persist()
+        spark = df.sparkSession
+        Path = spark._jvm.org.apache.hadoop.fs.Path
+        lineage = Path(f"{self.lineage_dir}/batch_id={batch_id}")
+        fs = lineage.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+        # the overwrite below deletes the batch's old output before its job
+        # runs, so the old lineage goes first: a failed write leaves none
+        fs.delete(lineage, True)
+
+        timed = bool(self.time_col) and self.time_col in df.columns
+        part = "__p"
+        while part in df.columns:
+            part += "_"
+        aggs = [F.histogram_numeric(part, F.lit(_MAX_BINS)).alias("parts")]
+        if timed:
+            # unix_micros takes TIMESTAMP only: a TIMESTAMP_NTZ column is
+            # read in the session time zone (a no-op cast otherwise)
+            t = F.col(self.time_col)
+            aggs += [
+                F.unix_micros(F.min(t).cast("timestamp")).alias("lo"),
+                F.unix_micros(F.max(t).cast("timestamp")).alias("hi"),
+            ]
+        obs = Observation()
+        out = df.withColumn(part, F.spark_partition_id()).observe(obs, *aggs).drop(part)
+        writer = out.write.mode("overwrite")
+        if self.fmt == "csv":
+            writer = writer.option("header", "true")
+        writer.format(self.fmt).save(f"{self.out_dir}/batch_id={batch_id}")
+
+        # only after a successful write: a failed one raised above and
+        # never waits on its observation
+        buf = pa.BufferOutputStream()
+        pq.write_table(_lineage_table(obs.get, batch_id, timed), buf)
+        stream = fs.create(Path(lineage, "part-00000.parquet"))
         try:
-            writer = df.write.mode("overwrite")
-            if self.fmt == "csv":
-                writer = writer.option("header", "true")
-            writer.format(self.fmt).save(f"{self.out_dir}/batch_id={batch_id}")
-            aggs = [F.count(F.lit(1)).alias("n_rows")]
-            if self.time_col and self.time_col in df.columns:
-                aggs += [
-                    F.min(self.time_col).alias("min_event_time"),
-                    F.max(self.time_col).alias("max_event_time"),
-                ]
-            lineage = (
-                df.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(*aggs)
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            lineage.write.mode("overwrite").parquet(
-                f"{self.lineage_dir}/batch_id={batch_id}"
-            )
+            stream.write(bytearray(buf.getvalue()))  # py4j sends bytearray as byte[]
         finally:
-            df.unpersist()
+            stream.close()
 
     def read_output(self, spark) -> DataFrame:
         reader = spark.read.option("basePath", self.out_dir)

@@ -1,8 +1,9 @@
 """Per-micro-batch metrics capture for streaming jobs.
 
 The north rule requires the job to checkpoint "with per-partition
-lineage and metrics so it resumes mid-stream": lineage rows are written
-by ``sinks/exactly_once.ExactlyOnceSink``; this module records the
+lineage and metrics so it resumes mid-stream": lineage rows (exact row
+count per output partition, the micro-batch's event-time range) are
+written by ``sinks/exactly_once.ExactlyOnceSink``; this module records the
 METRICS side — one JSONL line per completed micro-batch with the
 numbers an operator actually pages on: input rows, processing rate,
 per-stateful-operator state rows/memory, and the event-time watermark.

@@ -4,9 +4,11 @@ destinations.proto:10-16)."""
 
 from __future__ import annotations
 
+import glob
 import os
 import subprocess
 import sys
+import threading
 import time
 import uuid
 
@@ -126,6 +128,130 @@ def test_csv_sink_roundtrip(spark, tmp_path):
     assert back.count() == 3
     lineage = sink.read_lineage(spark)
     assert lineage.agg(F.sum("n_rows")).collect()[0][0] == 3
+
+
+def _within(seconds, fn):
+    """Run ``fn()`` in a daemon thread; fail if it has not returned after
+    ``seconds`` (a stuck call is left behind), else re-raise its error."""
+    err = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            err.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    if err:
+        raise err[0]
+
+
+def _skewed_batch(spark):
+    """10 partitions of 400 ids: partition 0 keeps all 400 rows, 1-4
+    keep 10 each, 5-9 are empty (no shuffle, so the layout is fixed)."""
+    df = spark.range(0, 4000, 1, 10).filter(
+        (F.col("id") < 400) | ((F.col("id") < 2000) & (F.col("id") % 40 == 0))
+    )
+    return df.withColumn("time", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")))
+
+
+LINEAGE_TIMED = (
+    "struct<partition:int,n_rows:bigint,min_event_time:timestamp,"
+    "max_event_time:timestamp,batch_id:int>"
+)
+LINEAGE_UNTIMED = "struct<partition:int,n_rows:bigint,batch_id:int>"
+
+
+def test_sink_lineage_exact_counts_and_batch_range(spark, tmp_path):
+    df = _skewed_batch(spark)
+    assert df.rdd.getNumPartitions() == 10
+    want = {
+        r["p"]: r["n"]
+        for r in df.groupBy(F.spark_partition_id().alias("p")).agg(F.count("*").alias("n")).collect()
+    }
+    assert want == {0: 400, 1: 10, 2: 10, 3: 10, 4: 10}
+    lo, hi = df.agg(F.min("time"), F.max("time")).collect()[0]
+
+    sink = ExactlyOnceSink(str(tmp_path / "out"), time_col="time")
+    sink(df, 3)
+    lin = spark.read.parquet(f"{sink.lineage_dir}/batch_id=3")
+    assert lin.schema.simpleString() == LINEAGE_TIMED
+    rows = lin.collect()
+    assert {r["partition"]: r["n_rows"] for r in rows} == want
+    assert len(rows) == len(want)
+    assert all((r["min_event_time"], r["max_event_time"]) == (lo, hi) for r in rows)
+    assert all(r["batch_id"] == 3 for r in rows)
+    # the output keeps the input's columns: no helper column leaks out
+    out = spark.read.parquet(f"{sink.out_dir}/batch_id=3")
+    assert [(f.name, f.dataType) for f in out.schema] == [(f.name, f.dataType) for f in df.schema]
+    assert out.count() == sum(want.values())
+
+    # a TIMESTAMP_NTZ time column gives the same UTC lineage range
+    ntz = ExactlyOnceSink(str(tmp_path / "out_ntz"), time_col="time")
+    ntz(df.withColumn("time", F.col("time").cast("timestamp_ntz")), 1)
+    lin = spark.read.parquet(f"{ntz.lineage_dir}/batch_id=1")
+    assert lin.schema.simpleString() == LINEAGE_TIMED
+    assert {(r["min_event_time"], r["max_event_time"]) for r in lin.collect()} == {(lo, hi)}
+
+    untimed = ExactlyOnceSink(str(tmp_path / "out2"))
+    untimed(df, 0)
+    lin = spark.read.parquet(f"{untimed.lineage_dir}/batch_id=0")
+    assert lin.schema.simpleString() == LINEAGE_UNTIMED
+    assert {r["partition"]: r["n_rows"] for r in lin.collect()} == want
+
+
+def test_sink_runs_one_job_per_call(spark, tmp_path):
+    df = _skewed_batch(spark)
+    sink = ExactlyOnceSink(str(tmp_path / "out"), time_col="time")
+    assert len(_job_ids(spark, lambda: sink(df, 0))) == 1
+    assert len(_job_ids(spark, lambda: sink(df, 0))) == 1  # replay
+
+
+def test_sink_empty_batches_leave_zero_row_lineage(spark, tmp_path):
+    schema = "id long, time timestamp"
+    empties = {
+        0: spark.range(5).withColumn("time", F.current_timestamp()).filter(F.lit(False)),
+        1: spark.createDataFrame(spark.sparkContext.emptyRDD(), schema),
+    }
+    assert empties[1].rdd.getNumPartitions() == 0
+    sink = ExactlyOnceSink(str(tmp_path / "out"), time_col="time")
+    for batch_id, df in empties.items():
+        _within(120, lambda: sink(df, batch_id))
+        files = glob.glob(f"{sink.lineage_dir}/batch_id={batch_id}/*.parquet")
+        assert len(files) == 1
+        assert pq.read_table(files[0]).num_rows == 0
+    assert sink.read_output(spark).count() == 0
+
+
+def test_sink_failed_write_raises_without_lineage(spark, tmp_path):
+    df = spark.range(0, 100, 1, 4).withColumn(
+        "v", F.when(F.col("id") == 42, F.raise_error(F.lit("boom"))).otherwise(F.lit("ok"))
+    )
+    sink = ExactlyOnceSink(str(tmp_path / "out"))
+    with pytest.raises(Exception, match="boom"):
+        _within(120, lambda: sink(df, 5))
+    assert not os.path.exists(f"{sink.lineage_dir}/batch_id=5")
+    # a failed replay of a committed batch: the overwrite has dropped the
+    # old output, and the old lineage goes with it
+    sink(df.filter(F.col("id") != 42), 6)
+    assert os.path.exists(f"{sink.lineage_dir}/batch_id=6")
+    with pytest.raises(Exception, match="boom"):
+        _within(120, lambda: sink(df, 6))
+    assert not os.path.exists(f"{sink.lineage_dir}/batch_id=6")
+
+
+def test_sink_replay_leaves_one_lineage_file(spark, tmp_path):
+    df = _skewed_batch(spark)
+    sink = ExactlyOnceSink(str(tmp_path / "out"), time_col="time")
+    sink(df, 2)
+    sink(df, 2)
+    files = glob.glob(f"{sink.lineage_dir}/batch_id=2/*.parquet")
+    assert len(files) == 1
+    assert pq.read_table(files[0])["n_rows"].to_pylist() == [400, 10, 10, 10, 10]
+    assert sink.read_output(spark).count() == 440
 
 
 def test_avro_source_end_to_end(spark, tmp_path):

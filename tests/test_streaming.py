@@ -15,6 +15,7 @@ import shutil
 import time
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -122,6 +123,19 @@ def test_stream_running_agg_equals_batch(spark, events_tl, tmp_path):
         spark, in_dir, events_tl.df.schema, SPECS, str(tmp_path / "ck"), str(tmp_path / "out")
     )
     _assert_matches_batch(sink, spark, _batch_expected(events_tl))
+    # the lineage observed inside each micro-batch's write counts exactly
+    # the rows of that batch's output directory
+    lineage = {
+        r["batch_id"]: r["n"]
+        for r in sink.read_lineage(spark).groupBy("batch_id").agg(F.sum("n_rows").alias("n")).collect()
+    }
+    written = {
+        int(d.split("=", 1)[1]): pq.read_table(os.path.join(sink.out_dir, d)).num_rows
+        for d in os.listdir(sink.out_dir)
+        if d.startswith("batch_id=")
+    }
+    assert len(written) >= 3
+    assert lineage == written
 
 
 def test_stream_variance_first_equals_batch(spark, events_tl, tmp_path):
